@@ -129,33 +129,38 @@ class Server:
         )
         env["SPARK_GRAFT_CPUS"] = str(len(os.sched_getaffinity(0)))
         env.setdefault("SPARK_DRIVER_MEMORY", "2g")
+        env["PYTHONHASHSEED"] = "0"  # the same dict and set layouts every run
         # keep every file the server writes inside the checkout
         tmp = os.path.join(WORK, "tmp")
-        os.makedirs(tmp)
+        os.makedirs(tmp, exist_ok=True)
         env["SPARK_LOCAL_DIRS"] = os.path.join(WORK, "spark-local")
         env["TMPDIR"] = tmp
         env["JDK_JAVA_OPTIONS"] = " ".join(
             p for p in (env.get("JDK_JAVA_OPTIONS"), f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData") if p
         )
+        # the server and its JVM print only to the log; the ready signal
+        # is a file
         self.proc = subprocess.Popen(
             [sys.executable, os.path.join(HERE, "server.py"), "--work", WORK,
              "--tilecache", tilecache, "--trace", str(int(trace))],
-            cwd=WORK, env=env, stdout=subprocess.PIPE, stderr=log,
-            start_new_session=True, text=True,
+            cwd=WORK, env=env, stdin=subprocess.DEVNULL, stdout=log, stderr=log,
+            start_new_session=True,
         )
         self.pids: list[int] = [self.proc.pid]
         self.ready: dict = {}
 
     def wait_ready(self, timeout: float) -> dict:
-        out: list[str] = []
-        reader = threading.Thread(
-            target=lambda: out.append(self.proc.stdout.readline()), daemon=True
-        )
-        reader.start()
-        reader.join(timeout)
-        if not out or not out[0].strip():
-            raise RuntimeError("server did not start (see .perfbench_work/server.log)")
-        self.ready = json.loads(out[0])
+        path = os.path.join(WORK, "ready.json")
+        deadline = time.perf_counter() + timeout
+        while not os.path.exists(path):
+            if self.proc.poll() is not None:
+                raise RuntimeError(f"server exited with code {self.proc.returncode} "
+                                   "during set-up")
+            if time.perf_counter() > deadline:
+                raise RuntimeError(f"server not ready after {timeout:.0f} s")
+            time.sleep(0.05)
+        with open(path) as f:
+            self.ready = json.load(f)
         self.pids = process_tree(self.proc.pid)
         return self.ready
 
@@ -165,7 +170,7 @@ class Server:
         if self.proc.poll() is None:
             self.proc.send_signal(signal.SIGTERM)
             try:
-                self.proc.wait(timeout=60)
+                self.proc.wait(timeout=30)
             except subprocess.TimeoutExpired:
                 pass
         for sig in (signal.SIGTERM, signal.SIGKILL):
@@ -175,14 +180,16 @@ class Server:
                     os.kill(p, sig)
                 except ProcessLookupError:
                     pass
-            if self.proc.poll() is None:
+            try:
                 self.proc.wait(timeout=10)
+            except subprocess.TimeoutExpired:
+                pass
             deadline = time.time() + 10
             while left and time.time() < deadline:
                 left = [p for p in left if os.path.exists(f"/proc/{p}")
                         and not _is_zombie(p)]
                 time.sleep(0.1)
-            if not left:
+            if not left and self.proc.poll() is not None:
                 break
 
 
@@ -212,7 +219,7 @@ class Client:
             resp = conn.getresponse()
             body = resp.read()
             status, ctype = resp.status, resp.getheader("Content-Type", "")
-        except (OSError, http.client.HTTPException) as e:
+        except Exception as e:  # noqa: BLE001 - any client error is a failed request
             status, ctype, body = 0, "", repr(e).encode()
         finally:
             conn.close()
@@ -258,13 +265,15 @@ LADDER = (4.0, 8.0, 12.0)  # multiples of TILE_RATE after the nominal phase
 # shares of the run: cache fill at twice the nominal rate (not measured;
 # it also pays each parquet file's first open), the measured nominal
 # phase, then each ladder step
-FILL_SHARE, NOMINAL_SHARE = 0.15, 0.65
+FILL_SHARE, NOMINAL_SHARE = 0.15, 0.7
 
 
 def tile_browse(client: Client, seed: int, seconds: float) -> dict:
     """Independent map viewers: open-loop Poisson arrivals from 4 senders.
     The cache fills at twice the nominal rate, the nominal phase is measured,
-    then a ladder of higher fixed rates probes the sustainable rate."""
+    then a ladder of higher fixed rates probes the sustainable rate. Each
+    phase sends the same number and mix of requests for every seed; the
+    seed draws the order and the arrival times."""
     rng = random.Random(seed)
     keys = wl.TileKeys(rng)
     step_share = (1 - FILL_SHARE - NOMINAL_SHARE) / len(LADDER)
@@ -273,8 +282,8 @@ def tile_browse(client: Client, seed: int, seconds: float) -> dict:
     t = time.perf_counter() + 0.2
     schedule = []
     for name, mult, share in phases:
-        for due in stats.poisson_arrivals(TILE_RATE * mult, t, t + share * seconds, rng):
-            schedule.append((due, keys.next(), name))
+        dues = stats.fixed_count_arrivals(TILE_RATE * mult, t, t + share * seconds, rng)
+        schedule += [(due, req, name) for due, req in zip(dues, keys.batch(len(dues)))]
         t += share * seconds
     records = open_loop(client, schedule, threads=4)
     return {"records": records,
@@ -282,42 +291,35 @@ def tile_browse(client: Client, seed: int, seconds: float) -> dict:
 
 
 def timeseries_mix(client: Client, seed: int, seconds: float) -> dict:
-    """Analytics callers that wait for replies: 2 closed-loop clients, each
-    walking a fixed cycle of request classes with seeded parameters."""
-    # one point TS per six requests keeps the median inside the Spark-scan
-    # classes, so it does not jump with how many point requests a run fits
-    cycle = ("point", "rect", "ctile", "rect", "nonrect", "fanout")
-    ctiles = wl.ComputedTiles(random.Random(seed))
-    lock = threading.Lock()
+    """An analytics caller that waits for replies: one closed-loop client
+    walking ``TS_CYCLE`` with seeded parameters. One client keeps each
+    request's latency its own: with two, every latency also depends on
+    which request of the other client it overlapped.
+
+    Every request counts in ``attempted``/``failed``; the latency
+    statistics take whole sessions only (a run fits one or two), so a run
+    that fits one request more or less does not change the mix of costs
+    they summarize."""
+    rng = random.Random(seed)
+    ctiles = wl.ComputedTiles(random.Random(f"{seed}/ctile"))
+    make = {
+        "point": lambda frac, dated: wl.point_request(rng, dated),
+        "rect": lambda frac, dated: wl.rect_request(rng, frac, dated),
+        "nonrect": lambda frac, dated: wl.nonrect_request(rng, dated),
+        "fanout": lambda frac, dated: wl.fanout_request(rng, dated),
+        "ctile": lambda frac, dated: ctiles.next(),
+    }
     records: list[dict] = []
     deadline = time.perf_counter() + seconds
-    ids = itertools.count()
-
-    def caller(c: int) -> None:
-        rng = random.Random(f"{seed}/{c}")
-        # each client walks the rectangle sizes from its own starting point
-        sizes = itertools.cycle(wl.RECT_FRACTIONS[2 * c:] + wl.RECT_FRACTIONS[:2 * c])
-        make = {
-            "point": lambda: wl.point_request(rng),
-            "rect": lambda: wl.rect_request(rng, next(sizes)),
-            "nonrect": lambda: wl.nonrect_request(rng),
-            "fanout": lambda: wl.fanout_request(rng),
-            "ctile": ctiles.next,
-        }
-        for n in itertools.count(len(cycle) // 2 * c):
-            if time.perf_counter() >= deadline:
-                return
-            rec = client.send(make[cycle[n % len(cycle)]](), str(next(ids)))
-            rec["latency"] = rec["end"] - rec["start"]
-            with lock:
-                records.append(rec)
-
-    pool = [threading.Thread(target=caller, args=(c,)) for c in range(2)]
-    for t in pool:
-        t.start()
-    for t in pool:
-        t.join()
-    return {"records": records, "primary": records}
+    for n in itertools.count():
+        if time.perf_counter() >= deadline:
+            break
+        cls, frac, dated = wl.TS_CYCLE[n % len(wl.TS_CYCLE)]
+        rec = client.send(make[cls](frac, dated), str(n))
+        rec["latency"] = rec["end"] - rec["start"]
+        records.append(rec)
+    whole = len(records) - len(records) % len(wl.TS_CYCLE)
+    return {"records": records, "primary": records[:whole] or records}
 
 
 # workload -> (traffic, --tilecache, request classes it sends)
@@ -402,7 +404,7 @@ def latency_summary(recs: list[dict]) -> dict:
         return {"n": 0}
     p, t = stats.tail(lat)
     return {"n": len(lat), "p50_ms": stats.percentile(lat, 50),
-            "tail_pct": p, "tail_ms": t}
+            "p90_ms": stats.percentile(lat, 90), "tail_pct": p, "tail_ms": t}
 
 
 def ladder_summary(records: list[dict]) -> dict:
@@ -463,7 +465,7 @@ def per_layer(spans_path: str, records: list[dict], ready: dict, final: dict,
     m["cache.evictions"] = sum(s[6].get("evicted", 0) for s in puts)
     m["cache.get_us_p50"] = p([d * 1000 for d in dur_ms(gets)])
     m["cache.put_us_p50"] = p([d * 1000 for d in dur_ms(puts)])
-    m["cache.bytes_held_ratio"] = final["cache_bytes_held"] / ready["capacity"]
+    m["cache.bytes_held_ratio"] = final.get("cache_bytes_held", 0) / ready["capacity"]
 
     reads = named("tiles.read")
     m["tiles.read_ms_p50"] = p(minus_overhead(reads))
@@ -567,7 +569,7 @@ def main() -> int:
     sys.path.insert(0, ROOT)  # the oracle renders expected tiles with apply_cmap
 
     shutil.rmtree(WORK, ignore_errors=True)
-    os.makedirs(WORK)
+    os.makedirs(WORK, exist_ok=True)
     run, tilecache, classes = WORKLOADS[args.workload]
     monitor = Monitor()
     monitor.start()
@@ -579,6 +581,8 @@ def main() -> int:
         try:
             monitor.pid = server.proc.pid
             ready = server.wait_ready(SETUP_TIMEOUT_S)
+            # flush the cube's dirty pages now, not during the traffic
+            os.sync()
             client = Client(ready["port"])
             warmup = warm_up(client, wl.warmup_requests(classes))
             setup_s = time.perf_counter() - t_setup
@@ -590,8 +594,13 @@ def main() -> int:
 
     records = out["records"]
     failed, mismatches = check(records, args.seed)
-    with open(os.path.join(WORK, "final.json")) as f:
-        final = json.load(f)
+    final_path = os.path.join(WORK, "final.json")
+    final = {}
+    if os.path.exists(final_path):
+        with open(final_path) as f:
+            final = json.load(f)
+    else:
+        print("server ended without writing final.json", file=sys.stderr)
 
     classes = sorted({r["req"]["cls"] for r in records})
     primary = latency_summary(out["primary"])
@@ -602,8 +611,8 @@ def main() -> int:
         "primary": primary,
         "classes": {c: latency_summary([r for r in records if r["req"]["cls"] == c])
                     for c in classes},
-        "latencies_ms": [[r["req"]["cls"], r.get("step"), r["latency"] * 1000]
-                         for r in records],
+        "latencies_ms": [[r["req"]["cls"], r.get("step"), r["latency"] * 1000,
+                          r.get("late", 0.0) * 1000] for r in records],
         "attempted": len(records), "failed": failed,
         "failures": [f"{r['req']['path']}: {r['problem']}"
                      for r in records if r.get("problem")][:20],
@@ -623,10 +632,10 @@ def main() -> int:
         metrics = per_layer(os.path.join(WORK, "spans.jsonl"), records, ready,
                             final, monitor)
         metrics["trace.client_p50_ms"] = primary.get("p50_ms", 0.0)
+        metrics["trace.client_p90_ms"] = primary.get("p90_ms", 0.0)
     else:
         metrics = {
             "p50_ms": primary["p50_ms"],
-            "tail_ms": primary["tail_ms"],
             "setup_s": setup_s,
         }
     detail["metrics"] = metrics
@@ -661,5 +670,21 @@ def unit_of(name: str) -> str:
     return "count"
 
 
+def log_tail(lines: int = 40) -> str:
+    try:
+        with open(os.path.join(WORK, "server.log"), errors="replace") as f:
+            return "".join(f.readlines()[-lines:])
+    except OSError:
+        return ""
+
+
 if __name__ == "__main__":
-    sys.exit(main())
+    try:
+        sys.exit(main())
+    except Exception:
+        import traceback
+
+        traceback.print_exc()
+        print("--- last lines of .perfbench_work/server.log ---\n" + log_tail(),
+              file=sys.stderr)
+        sys.exit(1)

@@ -7,8 +7,11 @@ it. Before that it builds the demo-scale cube with the repository's own
 write path (``synth_demo_cube`` + ``write_cube``), so ingest is part of
 set-up.
 
-Protocol: one JSON line on stdout once the server listens (port and set-up
-timings); SIGTERM stops it, after writing the spans of a traced run.
+Protocol: once the server listens it writes ``ready.json`` (port and set-up
+timings) into the work directory, by an atomic rename, so nothing else the
+process or its JVM prints can be mistaken for it. SIGTERM stops it: it
+writes the tile cache's state (``final.json``) and the spans of a traced
+run, then stops the HTTP server and Spark.
 
     python3 perfbench/server.py --work DIR --tilecache 512M --trace 0
 """
@@ -135,24 +138,30 @@ def main() -> int:
     }
     if rec is not None:
         ready.update(ingest_stats(cube_dir))
-    print(json.dumps(ready), flush=True)
+    write_json(os.path.join(args.work, "ready.json"), ready)
 
     stop.wait()
-    server.stop()
     held = server.tiles._cache
-    with open(os.path.join(args.work, "final.json"), "w") as f:
-        json.dump(
-            {
-                "cache_entries": len(held),
-                "cache_bytes_held": sum(map(len, held._data.values())),
-                "cache_bytes_accounted": held._used,
-            },
-            f,
-        )
+    write_json(
+        os.path.join(args.work, "final.json"),
+        {
+            "cache_entries": len(held),
+            "cache_bytes_held": sum(map(len, held._data.values())),
+            "cache_bytes_accounted": held._used,
+        },
+    )
     if rec is not None:
         rec.dump(os.path.join(args.work, "spans.jsonl"))
+    server.stop()
     spark.stop()
     return 0
+
+
+def write_json(path: str, doc: dict) -> None:
+    """Write ``doc`` so that a reader sees the whole file or none of it."""
+    with open(path + ".tmp", "w") as f:
+        json.dump(doc, f)
+    os.replace(path + ".tmp", path)
 
 
 if __name__ == "__main__":

@@ -32,16 +32,14 @@ def tail(values: list[float], beyond: int = 10) -> tuple[float, float]:
     return 100.0 * (n - beyond) / n, sorted(values)[n - 1 - beyond]
 
 
-def poisson_arrivals(rate: float, start: float, end: float,
-                     rng: random.Random) -> list[float]:
+def fixed_count_arrivals(rate: float, start: float, end: float,
+                         rng: random.Random) -> list[float]:
     """Due times of a Poisson process of ``rate`` per second in
-    ``[start, end)``."""
-    out = []
-    t = start + rng.expovariate(rate)
-    while t < end:
-        out.append(t)
-        t += rng.expovariate(rate)
-    return out
+    ``[start, end)``, conditioned on its expected count: every seed sends
+    the same number of requests, at seeded times (independent uniforms,
+    sorted)."""
+    n = round(rate * (end - start))
+    return sorted(rng.uniform(start, end) for _ in range(n))
 
 
 def open_loop_times(due: float, start: float, end: float) -> tuple[float, float]:

@@ -10,6 +10,7 @@ import random
 import sys
 import threading
 import time
+from collections import Counter
 
 import numpy as np
 import pytest
@@ -153,15 +154,6 @@ def test_stall_charges_requests_queued_behind_it():
     assert all(lat >= late for lat, late in out)
 
 
-def test_poisson_arrivals_are_seeded_and_near_rate():
-    a = stats.poisson_arrivals(100.0, 0.0, 50.0, random.Random(7))
-    b = stats.poisson_arrivals(100.0, 0.0, 50.0, random.Random(7))
-    assert a == b
-    assert all(0.0 <= t < 50.0 for t in a)
-    assert a == sorted(a)
-    assert 4700 < len(a) < 5300
-
-
 # -- traffic and oracle helpers ------------------------------------------------------
 
 
@@ -183,11 +175,30 @@ def test_times_in_date_ranges():
 
 def test_tile_keys_are_seeded_and_inside_the_data():
     ka, kb = wl.TileKeys(random.Random(5)), wl.TileKeys(random.Random(5))
-    assert [ka.next()["path"] for _ in range(50)] == [kb.next()["path"] for _ in range(50)]
-    keys = wl.TileKeys(random.Random(5))
-    for _ in range(500):
-        r = keys.next()
+    assert [r["path"] for r in ka.batch(50)] == [r["path"] for r in kb.batch(50)]
+    for r in wl.TileKeys(random.Random(5)).batch(500):
         assert (r["x"], r["y"]) in wl.data_tiles(r["z"])
+
+
+def test_tile_batch_mix_is_the_same_for_every_seed():
+    def mix(seed):
+        reqs = wl.TileKeys(random.Random(seed)).batch(600)
+        keys = Counter((r["var"], r["z"], r["x"], r["y"], r["time"]) for r in reqs)
+        forms = Counter("wmts" if r["path"].startswith("/wmts") else
+                        "override" if "cbar=" in r["path"] else "plain" for r in reqs)
+        return keys, forms
+
+    (ka, fa), (kb, fb) = mix(1), mix(2)
+    assert fa == fb == {"wmts": 120, "override": 90, "plain": 390}
+    assert all(abs(ka[k] - kb[k]) <= 1 for k in set(ka) | set(kb))
+
+
+def test_fixed_count_arrivals_send_the_expected_count():
+    a = stats.fixed_count_arrivals(50.0, 10.0, 23.0, random.Random(3))
+    b = stats.fixed_count_arrivals(50.0, 10.0, 23.0, random.Random(4))
+    assert len(a) == len(b) == 650
+    assert a == sorted(a) and all(10.0 <= t < 23.0 for t in a)
+    assert a != b
 
 
 def test_decode_png_reads_all_row_filters():

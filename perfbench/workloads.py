@@ -94,7 +94,9 @@ def tile_request(ds: str, var: str, z: int, x: int, y: int, time: str,
 class TileKeys:
     """Zipf-skewed tile keys: low zooms, recent times and a hot viewport
     are favoured. Shares of requests use the WMTS REST URL or carry
-    ``cbar``/``vmin``/``vmax`` overrides.
+    ``cbar``/``vmin``/``vmax`` overrides. The seed draws the keys; the
+    viewport is fixed, so every seed draws from the same distribution and
+    the cache sees the same working set.
 
     The skew puts about three quarters of requests on keys a 4 MB cache
     can hold: the median tile is a hit and the tail a miss, rather than
@@ -102,10 +104,11 @@ class TileKeys:
 
     WMTS_SHARE = 0.2
     OVERRIDE_SHARE = 0.15
+    HOT = (0.45, 0.4)  # hot viewport centre, as a share of the extent
 
     def __init__(self, rng: random.Random):
         self.rng = rng
-        hot_lon, hot_lat = rng.uniform(0.25, 0.75), rng.uniform(0.25, 0.75)
+        hot_lon, hot_lat = self.HOT
         self.keys, weights = [], []
         for z in range(NUM_LEVELS):
             w, h = level_size(NUM_LEVELS - 1 - z)
@@ -131,19 +134,32 @@ class TileKeys:
             acc += w / total
             self.cum.append(acc)
 
-    def next(self) -> dict:
+    def batch(self, n: int) -> list[dict]:
+        """``n`` requests in seeded order whose mix is the same for every
+        seed: systematic sampling gives each key its expected count, give
+        or take one, and the URL-form and override shares are exact."""
         import bisect
 
         r = self.rng
-        k = min(bisect.bisect_left(self.cum, r.random()), len(self.keys) - 1)
-        var, z, x, y, time = self.keys[k]
         u = r.random()
-        if u < self.WMTS_SHARE:
-            return tile_request("demo", var, z, x, y, time, wmts=True)
-        if u < self.WMTS_SHARE + self.OVERRIDE_SHARE:
-            return tile_request("demo", var, z, x, y, time,
-                                style=r.choice(OVERRIDES))
-        return tile_request("demo", var, z, x, y, time)
+        picks = [min(bisect.bisect_left(self.cum, (u + i) / n), len(self.keys) - 1)
+                 for i in range(n)]
+        forms = ["wmts"] * round(n * self.WMTS_SHARE)
+        forms += ["override"] * round(n * self.OVERRIDE_SHARE)
+        forms += ["plain"] * (n - len(forms))
+        r.shuffle(picks)
+        r.shuffle(forms)
+        out = []
+        for k, form in zip(picks, forms):
+            var, z, x, y, time = self.keys[k]
+            if form == "wmts":
+                out.append(tile_request("demo", var, z, x, y, time, wmts=True))
+            elif form == "override":
+                out.append(tile_request("demo", var, z, x, y, time,
+                                        style=r.choice(OVERRIDES)))
+            else:
+                out.append(tile_request("demo", var, z, x, y, time))
+        return out
 
 
 def _rect(rng: random.Random, frac: float) -> tuple[int, int, int, int]:
@@ -167,8 +183,10 @@ def rect_polygon(i0: int, i1: int, j0: int, j1: int) -> dict:
             "coordinates": [[[w, s], [e, s], [e, n], [w, n], [w, s]]]}
 
 
-def _dates(rng: random.Random, share: float = 0.3):
-    return rng.choice(DATE_RANGES) if rng.random() < share else (None, None)
+def _dates(rng: random.Random, dated: bool):
+    """A seeded ``startDate``/``endDate`` pair (each keeps three of the five
+    time steps), or none."""
+    return rng.choice(DATE_RANGES) if dated else (None, None)
 
 
 def _ts_path(var: str, kind: str, start, end, extra: str = "") -> str:
@@ -178,47 +196,60 @@ def _ts_path(var: str, kind: str, start, end, extra: str = "") -> str:
     return f"/ts/demo/{var}/{kind}" + ("?" + "&".join(q) if q else "")
 
 
-def point_request(rng: random.Random) -> dict:
+def point_request(rng: random.Random, dated: bool = False) -> dict:
     i, j = rng.randrange(HEIGHT), rng.randrange(WIDTH)
     var = rng.choice(VARS)
-    start, end = _dates(rng)
+    start, end = _dates(rng, dated)
     return {"cls": "point", "method": "GET", "body": None,
             "path": _ts_path(var, "point", start, end,
                              f"lon={lon_of(j)!r}&lat={lat_of(i)!r}"),
             "var": var, "rects": [(i, i, j, j)], "start": start, "end": end}
 
 
-RECT_FRACTIONS = (0.01, 0.03, 0.1, 0.3)
+# The analytics session a time-series client walks: (class, rectangle
+# share of the extent, with startDate/endDate). It holds every class and
+# rectangles of 1% and (twice) 30% of the extent; two of its seven
+# requests carry dates. It is the same for every seed (the seed draws
+# positions, variables, date ranges and computed-tile keys), so runs differ
+# in their inputs and not in their mix of costs. The two 30% rectangles
+# (a ~600,000-cell mask each) are its slowest requests, so the session's
+# p90 sits on them. One session takes 10-17 s on a 4-core host.
+TS_CYCLE = (
+    ("point", None, True), ("rect", 0.3, False), ("ctile", None, False),
+    ("rect", 0.01, False), ("fanout", None, True), ("nonrect", None, False),
+    ("rect", 0.3, False),
+)
 
 
-def rect_request(rng: random.Random, frac: float) -> dict:
+def rect_request(rng: random.Random, frac: float, dated: bool = False) -> dict:
     r = _rect(rng, frac)
     var = rng.choice(VARS)
-    start, end = _dates(rng)
+    start, end = _dates(rng, dated)
     return {"cls": "rect", "method": "POST",
             "path": _ts_path(var, "geometry", start, end),
             "body": json.dumps(rect_polygon(*r)).encode(),
             "var": var, "rects": [r], "start": start, "end": end}
 
 
-def nonrect_request(rng: random.Random) -> dict:
-    """A seeded diamond: slanted edges run the rasterizer's edge walk."""
+def nonrect_request(rng: random.Random, dated: bool = False) -> dict:
+    """A seeded diamond of about 3% of the extent: slanted edges run the
+    rasterizer's edge walk."""
     cx, cy = rng.uniform(1.0, 4.0), rng.uniform(50.6, 51.9)
-    rx, ry = rng.uniform(0.3, 0.9), rng.uniform(0.2, 0.5)
+    rx, ry = rng.uniform(0.5, 0.6), rng.uniform(0.3, 0.35)
     ring = [[cx, cy - ry], [cx + rx, cy], [cx, cy + ry], [cx - rx, cy],
             [cx, cy - ry]]
     var = rng.choice(VARS)
-    start, end = _dates(rng)
+    start, end = _dates(rng, dated)
     return {"cls": "nonrect", "method": "POST",
             "path": _ts_path(var, "geometry", start, end),
             "body": json.dumps({"type": "Polygon", "coordinates": [ring]}).encode(),
             "var": var, "rects": [], "start": start, "end": end}
 
 
-def fanout_request(rng: random.Random, n: int = 5) -> dict:
+def fanout_request(rng: random.Random, dated: bool = False, n: int = 5) -> dict:
     rects = [_rect(rng, rng.uniform(0.002, 0.02)) for _ in range(n)]
     var = rng.choice(VARS)
-    start, end = _dates(rng)
+    start, end = _dates(rng, dated)
     body = {"type": "GeometryCollection",
             "geometries": [rect_polygon(*r) for r in rects]}
     return {"cls": "fanout", "method": "POST",
@@ -229,11 +260,14 @@ def fanout_request(rng: random.Random, n: int = 5) -> dict:
 
 class ComputedTiles:
     """``demo-1w`` tiles, each key requested once, so every one misses the
-    cache and renders on the Spark path."""
+    cache and renders on the Spark path. All are full-resolution tiles of
+    the week that averages three input steps, so each costs the same work;
+    the seed draws the variable and the tile."""
 
     def __init__(self, rng: random.Random):
-        self.keys = [(var, z, x, y, w) for var in VARS for w in WEEKS
-                     for z in range(NUM_LEVELS) for x, y in data_tiles(z)]
+        z = NUM_LEVELS - 1
+        self.keys = [(var, z, x, y, WEEKS[1]) for var in VARS
+                     for x, y in data_tiles(z)]
         rng.shuffle(self.keys)
 
     def next(self) -> dict:
