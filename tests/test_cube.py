@@ -432,18 +432,20 @@ def test_tile_fast_path_matches_spark_path(demo_catalog):
 
 
 def test_batched_point_timeseries_matches_single(demo_catalog):
-    """N probes in ONE broadcast-join job must equal N single-point queries."""
-    from xcube_server_spark.cube.timeseries import time_series_for_points
-
+    """N Point geometries in ONE fan-out job must equal N single-point
+    queries; an out-of-grid point yields no rows."""
     pts = [(2.1, 51.4), (1.2, 50.6), (-150.0, -30.0)]  # last one outside
-    batched = time_series_for_points(demo_catalog, "demo", "conc_tsm", pts)
+    batched = time_series_for_geometry_collection(
+        demo_catalog, "demo", "conc_tsm",
+        [{"type": "Point", "coordinates": [lon, lat]} for lon, lat in pts],
+    )
     rows = batched.collect()
-    assert {r["point_id"] for r in rows} == {0, 1}  # outside point dropped
-    for pid, (lon, lat) in [(0, pts[0]), (1, pts[1])]:
+    assert {r["geometry_id"] for r in rows} == {0, 1}  # outside point dropped
+    for gid, (lon, lat) in [(0, pts[0]), (1, pts[1])]:
         single = time_series_for_point(
             demo_catalog, "demo", "conc_tsm", lon, lat
         ).collect()
-        mine = [r for r in rows if r["point_id"] == pid]
+        mine = [r for r in rows if r["geometry_id"] == gid]
         assert [
             (r["date"], r["total_count"], r["valid_count"], r["average"])
             for r in mine

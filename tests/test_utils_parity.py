@@ -175,31 +175,55 @@ def test_cli_parser():
 def test_byte_cache_policies():
     from xcube_server_spark.cube.cache import ByteCache
 
-    for policy in ("LRU", "MRU", "LFU", "RR"):
-        c = ByteCache(capacity=100, policy=policy)
-        c.put("a", b"x" * 30)
-        c.put("b", b"x" * 30)
-        c.put("c", b"x" * 30)  # 90 > 75 -> evict down
-        assert len(c) >= 1
     # LRU semantics: oldest unaccessed key evicted first
-    c = ByteCache(capacity=100, policy="LRU")
+    c = ByteCache(capacity=100)
     c.put("a", b"x" * 30)
     c.put("b", b"x" * 30)
     _ = c.get("a")  # refresh a
-    c.put("c", b"x" * 30)
+    c.put("c", b"x" * 30)  # 90 > 75 -> evict down
     assert "b" not in c and "a" in c
-    # LFU: least-frequently-used goes
-    c = ByteCache(capacity=100, policy="LFU")
-    c.put("a", b"x" * 30)
-    c.put("b", b"x" * 30)
-    for _ in range(3):
-        c.get("a")
-    c.put("c", b"x" * 30)
-    assert "b" not in c and "a" in c
-    import pytest as _pytest
 
-    with _pytest.raises(ValueError):
-        ByteCache(10, policy="FIFO")
+
+def test_byte_cache_concurrent_get_put():
+    """Request threads share one cache: racing gets and puts must neither
+    raise nor let the byte accounting drift from the bytes held."""
+    import random
+    import sys
+    import threading
+
+    from xcube_server_spark.cube.cache import EVICTION_THRESHOLD, ByteCache
+
+    c = ByteCache(capacity=60_000)
+    errors = []
+    start = threading.Barrier(8)
+
+    def worker(seed):
+        rng = random.Random(seed)
+        start.wait(timeout=30)
+        try:
+            for _ in range(20_000):
+                key = rng.randrange(64)
+                if rng.random() < 0.5:
+                    c.get(key)
+                else:
+                    c.put(key, b"x" * rng.randrange(500, 4000))
+        except Exception as e:  # noqa: BLE001 - any error fails the test
+            errors.append(e)
+
+    threads = [threading.Thread(target=worker, args=(i,)) for i in range(8)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)  # interleave threads more often
+    try:
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert c._used == sum(map(len, c._data.values()))
+    assert c._used <= EVICTION_THRESHOLD * c.capacity or len(c) == 1
 
 
 def test_measure_time():

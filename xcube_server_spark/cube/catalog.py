@@ -260,11 +260,6 @@ class CubeCatalog:
             ]
         return self._times_cache[identifier]
 
-    def cube_for_zoom(self, identifier: str, z: int) -> tuple[DataFrame, int]:
-        meta = self.datasets[identifier]
-        level = meta.tile_grid.level_for_zoom(z)
-        return self.cube(identifier, level), level
-
     def coords(self, identifier: str, dim: str) -> DataFrame:
         meta = self.datasets[identifier]
         if meta.computed:

@@ -149,9 +149,10 @@ class TileService:
     fast path (SURVEY.md §7.3-7).
 
     The cache is the app-layer analog of the reference's memory tile cache
-    (``xcube_server/cache.py:202-410`` with LRU policy,
-    ``xcube_server/context.py:80-93``): Spark jobs have ~100 ms overhead, so
-    repeated tile hits must not touch Spark at all.
+    (``xcube_server/cache.py:202-410``, ``xcube_server/context.py:80-93``):
+    one thread-safe LRU with the 0.75 eviction threshold, the reference's
+    default policy. Spark jobs have ~100 ms overhead, so repeated tile hits
+    must not touch Spark at all.
 
     Fast path: a single tile touches one time_idx partition and a handful of
     row groups; reading them with pyarrow on the driver (same pruning
@@ -166,7 +167,6 @@ class TileService:
         catalog: CubeCatalog,
         capacity: int = 512 * 1024 * 1024,
         fast_path: bool = True,
-        policy: str = "LRU",
         trace_perf: bool = False,
         file_cache_path: str | None = None,
         file_cache_capacity: int = 20 * 1000**3,
@@ -176,9 +176,7 @@ class TileService:
         self.fast_path = fast_path
         # --traceperf parity (xcube_server/cli.py:58-59, perf.py:33-52)
         self.trace_perf = trace_perf
-        # pluggable eviction policy (LRU/MRU/LFU/RR) — parity with the
-        # reference's cache policies (xcube_server/cache.py:174-197)
-        self._cache = ByteCache(capacity, policy=policy)
+        self._cache = ByteCache(capacity)
         # optional second-level disk tier, default OFF with a 20 GB cap —
         # parity with xcube_server/defaults.py:42-46
         self._file_cache = (
@@ -187,6 +185,28 @@ class TileService:
             else None
         )
 
+    def _local_part(self, ds_id: str, level: int, t_idx: int):
+        """pyarrow dataset of one ``time_idx`` partition of a level, or None
+        when the level has no local parquet table to read on the driver.
+
+        Driver-side pyarrow is a LOCAL-store fast path; computed datasets and
+        object-store levels (s3a://...) return None and take the
+        scheme-agnostic Spark read. level_path follows a `.link` pointer, so
+        grafted levels keep the fast path as long as the target is a local
+        table.
+        """
+        import pyarrow.dataset as pads
+
+        from ..sources.paths import local_part_glob
+
+        meta = self.catalog.datasets[ds_id]
+        if meta.computed or not meta.base_path:
+            return None
+        part_dir = f"{self.catalog.level_path(ds_id, level)}/time_idx={t_idx}"
+        if not local_part_glob(part_dir):
+            return None
+        return pads.dataset(part_dir, format="parquet")
+
     def _read_tile_fast(
         self, ds_id: str, var: str, z: int, x: int, y: int, t_idx: int
     ) -> "pd.DataFrame | None":
@@ -194,21 +214,13 @@ class TileService:
         time_idx + row-group predicate pruning on (lat_idx, lon_idx)."""
         import pyarrow.dataset as pads
 
-        from ..sources.paths import local_part_glob
         from .grid import level_sizes
 
         meta = self.catalog.datasets[ds_id]
-        if meta.computed or not meta.base_path:
-            return None
         tg = meta.tile_grid
         level = tg.level_for_zoom(z)
-        # Driver-side pyarrow is a LOCAL-store fast path; object-store tiles
-        # (s3a://...) return None here and take the scheme-agnostic Spark read.
-        # level_path follows a `.link` pointer, so grafted levels keep the
-        # fast path as long as the target is a local table.
-        part_dir = f"{self.catalog.level_path(ds_id, level)}/time_idx={t_idx}"
-        parts = local_part_glob(part_dir)
-        if not parts:
+        dataset = self._local_part(ds_id, level, t_idx)
+        if dataset is None:
             return None
         h_level = level_sizes(meta.grid.width, meta.grid.height, tg.num_levels)[level][1]
         # display rows [y*th, (y+1)*th) -> storage lat_idx range (flipped
@@ -219,7 +231,6 @@ class TileService:
         else:
             lat_lo = y * tg.tile_height
             lat_hi = (y + 1) * tg.tile_height
-        dataset = pads.dataset(part_dir, format="parquet")
         f = pads.field
         filt = (
             (f("lat_idx") >= lat_lo)
@@ -254,78 +265,62 @@ class TileService:
         with measure_time(
             f"tile {ds_id}/{var}/{z}/{x}/{y}", trace=self.trace_perf
         ):
-            return self._get_tile(
-                ds_id, var, z, x, y, time=time, cmap=cmap, vmin=vmin, vmax=vmax
-            )
-
-    def _get_tile(
-        self,
-        ds_id: str,
-        var: str,
-        z: int,
-        x: int,
-        y: int,
-        time: str | None = None,
-        cmap: str | None = None,
-        vmin: float | None = None,
-        vmax: float | None = None,
-    ) -> bytes:
-        meta = self.catalog.datasets[ds_id]
-        if not 0 <= z < meta.tile_grid.num_levels:
-            raise ValueError(
-                f"zoom {z} out of range [0, {meta.tile_grid.num_levels - 1}]"
-            )
-        st = meta.styles.get(var) or StyleMeta(color_bar=DEFAULT_CMAP)
-        st = StyleMeta(
-            color_bar=cmap or st.color_bar,
-            value_range=(
-                st.value_range[0] if vmin is None else vmin,
-                st.value_range[1] if vmax is None else vmax,
-            ),
-        )
-        key = (ds_id, var, z, x, y, time, st.color_bar, st.value_range)
-        cached = self._cache.get(key)
-        if cached is not None:
-            return cached
-        if self._file_cache is not None:
-            spilled = self._file_cache.get(key)
-            if spilled is not None:
-                self._cache.put(key, spilled)  # promote to memory tier
-                return spilled
-        png = None
-        if self.fast_path:
-            t_idx, _ = _nearest_time(self.catalog.times(ds_id), time)
-            pdf = self._read_tile_fast(ds_id, var, z, x, y, t_idx)
-            if pdf is not None:
-                tg = meta.tile_grid
-                render = _render_pdf_factory(
-                    tg.tile_width, tg.tile_height, *st.value_range,
-                    st.color_bar, var,
+            meta = self.catalog.datasets[ds_id]
+            if not 0 <= z < meta.tile_grid.num_levels:
+                raise ValueError(
+                    f"zoom {z} out of range [0, {meta.tile_grid.num_levels - 1}]"
                 )
-                png = bytes(render((y, x), pdf)["png"][0])
-        if png is None:
-            rows = (
-                render_tiles(
-                    self.catalog, ds_id, var, z, time=time, style=st,
-                    tiles=[(x, y)],
-                )
-                .collect()
+            st = meta.styles.get(var) or StyleMeta(color_bar=DEFAULT_CMAP)
+            st = StyleMeta(
+                color_bar=cmap or st.color_bar,
+                value_range=(
+                    st.value_range[0] if vmin is None else vmin,
+                    st.value_range[1] if vmax is None else vmax,
+                ),
             )
-            if rows:
-                png = bytes(rows[0]["png"])
-            else:
-                # Out-of-range tile: all-NaN → fully transparent (the
-                # reference still renders padded tiles,
-                # test/controllers/test_tiles.py:18).
-                tg = meta.tile_grid
-                blank = np.full((tg.tile_height, tg.tile_width), np.nan)
-                png = encode_rgba_png(
-                    apply_cmap(blank, *st.value_range, st.color_bar)
+            key = (ds_id, var, z, x, y, time, st.color_bar, st.value_range)
+            cached = self._cache.get(key)
+            if cached is not None:
+                return cached
+            if self._file_cache is not None:
+                spilled = self._file_cache.get(key)
+                if spilled is not None:
+                    self._cache.put(key, spilled)  # promote to memory tier
+                    return spilled
+            png = None
+            if self.fast_path:
+                t_idx, _ = _nearest_time(self.catalog.times(ds_id), time)
+                pdf = self._read_tile_fast(ds_id, var, z, x, y, t_idx)
+                if pdf is not None:
+                    tg = meta.tile_grid
+                    render = _render_pdf_factory(
+                        tg.tile_width, tg.tile_height, *st.value_range,
+                        st.color_bar, var,
+                    )
+                    png = bytes(render((y, x), pdf)["png"][0])
+            if png is None:
+                rows = (
+                    render_tiles(
+                        self.catalog, ds_id, var, z, time=time, style=st,
+                        tiles=[(x, y)],
+                    )
+                    .collect()
                 )
-        self._cache.put(key, png)
-        if self._file_cache is not None:
-            self._file_cache.put(key, png)
-        return png
+                if rows:
+                    png = bytes(rows[0]["png"])
+                else:
+                    # Out-of-range tile: all-NaN → fully transparent (the
+                    # reference still renders padded tiles,
+                    # test/controllers/test_tiles.py:18).
+                    tg = meta.tile_grid
+                    blank = np.full((tg.tile_height, tg.tile_width), np.nan)
+                    png = encode_rgba_png(
+                        apply_cmap(blank, *st.value_range, st.color_bar)
+                    )
+            self._cache.put(key, png)
+            if self._file_cache is not None:
+                self._file_cache.put(key, png)
+            return png
 
     def get_feature_info(
         self,
@@ -400,25 +395,19 @@ class TileService:
         t_idx: int,
     ) -> float | None:
         """One-cell read: pyarrow fast path, Spark fallback."""
-        meta = self.catalog.datasets[ds_id]
-        if self.fast_path and not meta.computed and meta.base_path:
+        dataset = self._local_part(ds_id, level, t_idx) if self.fast_path else None
+        if dataset is not None:
             import pyarrow.dataset as pads
 
-            from ..sources.paths import local_part_glob
-
-            part_dir = (
-                f"{self.catalog.level_path(ds_id, level)}/time_idx={t_idx}"
+            f = pads.field
+            table = dataset.to_table(
+                columns=[var],
+                filter=(f("lat_idx") == lat_idx) & (f("lon_idx") == col),
             )
-            if local_part_glob(part_dir):
-                f = pads.field
-                table = pads.dataset(part_dir, format="parquet").to_table(
-                    columns=[var],
-                    filter=(f("lat_idx") == lat_idx) & (f("lon_idx") == col),
-                )
-                if table.num_rows == 0:
-                    return None
-                v = table.column(var)[0].as_py()
-                return float(v) if v is not None else None
+            if table.num_rows == 0:
+                return None
+            v = table.column(var)[0].as_py()
+            return float(v) if v is not None else None
         df = self.catalog.spark.read.parquet(
             self.catalog.level_path(ds_id, level)
         )

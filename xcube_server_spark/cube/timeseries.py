@@ -31,18 +31,31 @@ from .catalog import CubeCatalog
 from .rasterize import Geometry, geometry_bbox, rasterize_mask
 
 
-def _ts_agg(df: DataFrame, var: str, total_count=None) -> DataFrame:
-    """A1/A2 shape: {time, totalCount, validCount, average} per step."""
+def _time_window(df: DataFrame, start: str | None, end: str | None) -> DataFrame:
+    """P3 time slice: keep steps in [start, end]; either bound may be open."""
+    if start is not None:
+        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
+    if end is not None:
+        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
+    return df
+
+
+def _ts_agg(
+    df: DataFrame, var: str, keys: tuple[str, ...] = (), total_count=None
+) -> DataFrame:
+    """A1/A2 shape: {time, totalCount, validCount, average} per step, and
+    per value of ``keys`` when given."""
     total = total_count if total_count is not None else F.count(F.lit(1))
     return (
-        df.groupBy("time")
+        df.groupBy(*keys, "time")
         .agg(
             total.alias("total_count"),
             F.count(var).alias("valid_count"),
             F.avg(var).alias("average"),
         )
-        .orderBy("time")
+        .orderBy(*keys, "time")
         .select(
+            *keys,
             iso_ts(F.col("time")).alias("date"),
             "total_count",
             "valid_count",
@@ -73,11 +86,7 @@ def time_series_for_point(
     df = catalog.cube(ds_id).filter(
         (F.col("lat_idx") == i) & (F.col("lon_idx") == j)
     )
-    if start is not None:
-        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
-    return _ts_agg(df.select("time", var), var)
+    return _ts_agg(_time_window(df, start, end).select("time", var), var)
 
 
 def time_series_for_geometry(
@@ -88,10 +97,14 @@ def time_series_for_geometry(
     start: str | None = None,
     end: str | None = None,
 ) -> DataFrame | None:
-    """Geometry TS: bbox clip (P4) + rasterized mask semi-join (J1) + A1.
+    """Geometry TS: rasterized mask semi-join (J1) + A1.
 
-    The mask DataFrame carries only (lat_idx, lon_idx) — thousands of rows —
-    and is broadcast: the cube side never shuffles.
+    A geometry whose bbox misses the grid returns None without a job. The
+    mask DataFrame carries the (lat_idx, lon_idx) of every cell the
+    geometry covers — about 31k to 600k rows for the polygons of the
+    serving benchmark on the 2000×1000 demo grid — and is broadcast into a ``left_semi`` join, so
+    the cube side never shuffles. The cube side gets no lat/lon filter:
+    its scan reads every cell of level 0 and the join drops the rest.
     """
     meta = catalog.datasets[ds_id]
     if geometry["type"] == "Point":
@@ -112,11 +125,11 @@ def time_series_for_geometry(
     df = catalog.cube(ds_id).join(
         broadcast(mask_df), ["lat_idx", "lon_idx"], "left_semi"
     )
-    if start is not None:
-        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
-    return _ts_agg(df.select("time", var), var, total_count=F.lit(total_count))
+    return _ts_agg(
+        _time_window(df, start, end).select("time", var),
+        var,
+        total_count=F.lit(total_count),
+    )
 
 
 def time_series_for_geometry_collection(
@@ -129,7 +142,10 @@ def time_series_for_geometry_collection(
 ) -> DataFrame:
     """U2 fan-out as ONE job: union all masks tagged with geometry_id and
     group by (geometry_id, time) — instead of the reference's sequential
-    per-geometry loop (``time_series.py:208-219``)."""
+    per-geometry loop (``time_series.py:208-219``). Point geometries are
+    one-cell masks, so N point probes are one broadcast equi-join (J3's
+    "many points × cube", SURVEY.md §2.3); out-of-grid points are dropped
+    (P7 per probe)."""
     meta = catalog.datasets[ds_id]
     rows = []
     for gi, geom in enumerate(geometries):
@@ -148,72 +164,4 @@ def time_series_for_geometry_collection(
     df = catalog.cube(ds_id).join(
         broadcast(mask_df), ["lat_idx", "lon_idx"], "inner"
     )
-    if start is not None:
-        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
-    return (
-        df.groupBy("geometry_id", "time")
-        .agg(
-            F.count(F.lit(1)).alias("total_count"),
-            F.count(var).alias("valid_count"),
-            F.avg(var).alias("average"),
-        )
-        .orderBy("geometry_id", "time")
-        .select(
-            "geometry_id",
-            iso_ts(F.col("time")).alias("date"),
-            "total_count",
-            "valid_count",
-            "average",
-        )
-    )
-
-
-def time_series_for_points(
-    catalog: CubeCatalog,
-    ds_id: str,
-    var: str,
-    points: list[tuple[float, float]],
-    start: str | None = None,
-    end: str | None = None,
-) -> DataFrame:
-    """Batched point probes — J3's "many points × cube" generalization
-    (SURVEY.md §2.3): N nearest-cell lookups become ONE broadcast equi-join
-    on rounded indices instead of N sequential jobs. Out-of-grid points are
-    dropped (P7 per probe).
-
-    Output: one row per (point_id, time) with the A2 stats shape.
-    """
-    meta = catalog.datasets[ds_id]
-    probes = [
-        (pid, meta.grid.lat_idx_of(lat), meta.grid.lon_idx_of(lon))
-        for pid, (lon, lat) in enumerate(points)
-        if meta.grid.contains(lon, lat)
-    ]
-    probe_df = catalog.spark.createDataFrame(
-        probes, "point_id int, lat_idx int, lon_idx int"
-    )
-    df = catalog.cube(ds_id).join(
-        broadcast(probe_df), ["lat_idx", "lon_idx"], "inner"
-    )
-    if start is not None:
-        df = df.filter(F.col("time") >= F.to_timestamp(F.lit(start)))
-    if end is not None:
-        df = df.filter(F.col("time") <= F.to_timestamp(F.lit(end)))
-    return (
-        df.groupBy("point_id", "time")
-        .agg(
-            F.count(F.lit(1)).alias("total_count"),
-            F.count(var).alias("valid_count"),
-            F.avg(var).alias("average"),
-        )
-        .orderBy("point_id", "time")
-        .select(
-            "point_id",
-            iso_ts(F.col("time")).alias("date"),
-            "total_count",
-            "valid_count",
-            "average",
-        )
-    )
+    return _ts_agg(_time_window(df, start, end), var, keys=("geometry_id",))

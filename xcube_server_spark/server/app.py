@@ -34,10 +34,9 @@ from __future__ import annotations
 
 import json
 import threading
+from functools import partialmethod
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from urllib.parse import parse_qs, urlparse
-
-from pyspark.sql import DataFrame
 
 from ..cube.catalog import CubeCatalog
 from ..cube.legend import render_legend
@@ -62,10 +61,9 @@ from ..sources.static_tiles import StaticTileSource
 from .wmts import get_wmts_capabilities_xml, parse_kvp
 
 
-def _ts_rows(df: DataFrame | None) -> dict:
-    """Reference TS response shape (``controllers/time_series.py:135-145``)."""
-    if df is None:
-        return {"results": []}
+def _ts_rows(rows) -> dict:
+    """Reference TS response shape (``controllers/time_series.py:135-145``)
+    of collected (date, total_count, valid_count, average) rows."""
     return {
         "results": [
             {
@@ -76,9 +74,15 @@ def _ts_rows(df: DataFrame | None) -> dict:
                     "average": r["average"],
                 },
             }
-            for r in df.collect()
+            for r in rows
         ]
     }
+
+
+def _read_json(h, empty: bytes = b"{}"):
+    """The request's JSON body; ``empty`` stands in for a missing one."""
+    length = int(h.headers.get("Content-Length", 0))
+    return json.loads(h.rfile.read(length) or empty)
 
 
 class CubeServer:
@@ -116,9 +120,9 @@ class CubeServer:
             def _error(self, code: int, msg: str) -> None:
                 self._json({"error": {"status": code, "message": msg}}, code)
 
-            def do_GET(self):
+            def _dispatch(self, method: str) -> None:
                 try:
-                    outer._route(self, "GET")
+                    outer._route(self, method)
                 except KeyError as e:
                     self._error(404, f"not found: {e}")
                 except ValueError as e:
@@ -126,15 +130,8 @@ class CubeServer:
                 except Exception as e:  # pragma: no cover
                     self._error(500, f"{type(e).__name__}: {e}")
 
-            def do_POST(self):
-                try:
-                    outer._route(self, "POST")
-                except KeyError as e:
-                    self._error(404, f"not found: {e}")
-                except ValueError as e:
-                    self._error(400, str(e))
-                except Exception as e:  # pragma: no cover
-                    self._error(500, f"{type(e).__name__}: {e}")
+            do_GET = partialmethod(_dispatch, "GET")
+            do_POST = partialmethod(_dispatch, "POST")
 
         self.httpd = ThreadingHTTPServer((host, port), Handler)
         self.port = self.httpd.server_address[1]
@@ -352,8 +349,7 @@ class CubeServer:
             h._json(get_time_series_info(self.catalog))
         elif method == "POST" and len(parts) == 4 and parts[0] == "ts" and parts[3] in ("geometries", "places"):
             # geometry-collection / feature-collection fan-out (U2): one job
-            length = int(h.headers.get("Content-Length", 0))
-            body = json.loads(h.rfile.read(length) or b"{}")
+            body = _read_json(h)
             if parts[3] == "geometries":
                 geoms = body.get("geometries", [])
             else:
@@ -368,26 +364,10 @@ class CubeServer:
                 start=q.get("startDate"),
                 end=q.get("endDate"),
             )
-            rows = df.collect()
-            results = []
-            for gi in range(len(geoms)):
-                sub = [r for r in rows if r["geometry_id"] == gi]
-                results.append(
-                    {
-                        "results": [
-                            {
-                                "date": r["date"],
-                                "result": {
-                                    "totalCount": r["total_count"],
-                                    "validCount": r["valid_count"],
-                                    "average": r["average"],
-                                },
-                            }
-                            for r in sub
-                        ]
-                    }
-                )
-            h._json({"results": results})
+            by_geom = [[] for _ in geoms]
+            for r in df.collect():
+                by_geom[r["geometry_id"]].append(r)
+            h._json({"results": [_ts_rows(rows) for rows in by_geom]})
         elif method == "GET" and len(parts) == 4 and parts[0] == "ts" and parts[3] == "point":
             df = time_series_for_point(
                 self.catalog,
@@ -398,11 +378,9 @@ class CubeServer:
                 start=q.get("startDate"),
                 end=q.get("endDate"),
             )
-            h._json(_ts_rows(df))
+            h._json(_ts_rows([] if df is None else df.collect()))
         elif method == "POST" and len(parts) == 4 and parts[0] == "ts" and parts[3] == "geometry":
-            length = int(h.headers.get("Content-Length", 0))
-            body = json.loads(h.rfile.read(length) or b"{}")
-            geom = parse_query_geometry(body=body)
+            geom = parse_query_geometry(body=_read_json(h))
             df = time_series_for_geometry(
                 self.catalog,
                 parts[1],
@@ -411,7 +389,7 @@ class CubeServer:
                 start=q.get("startDate"),
                 end=q.get("endDate"),
             )
-            h._json(_ts_rows(df))
+            h._json(_ts_rows([] if df is None else df.collect()))
         elif method == "GET" and parts == ["places"]:
             # place-group inventory (xcube_server/context.py:297-303)
             if self._live_places() is None:
@@ -456,9 +434,7 @@ class CubeServer:
                 # FindPlacesHandler.post: query geometry as a GeoJSON body
                 # (geometry, Feature or FeatureCollection —
                 # xcube_server/handlers.py:273-283)
-                length = int(h.headers.get("Content-Length", 0))
-                body = json.loads(h.rfile.read(length) or b"null")
-                geom = parse_query_geometry(body=body)
+                geom = parse_query_geometry(body=_read_json(h, b"null"))
             else:
                 if q.get("geom") and q.get("bbox"):
                     raise ValueError(
