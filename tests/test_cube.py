@@ -7,6 +7,7 @@ from __future__ import annotations
 import datetime as dt
 import json
 import math
+import re
 
 import numpy as np
 import pytest
@@ -19,10 +20,12 @@ from xcube_server_spark.cube.places import find_places, load_place_group, union_
 from xcube_server_spark.cube.rasterize import rasterize_mask
 from xcube_server_spark.cube.tiles import TileService, render_tiles
 from xcube_server_spark.cube.timeseries import (
+    mask_runs,
     time_series_for_geometry,
     time_series_for_geometry_collection,
     time_series_for_point,
 )
+from xcube_server_spark.plans.explain import executed_plan, pushed_filters
 from xcube_server_spark.sources.cube_ingest import (
     DEMO_EXTENT,
     DEMO_TIMES,
@@ -153,15 +156,39 @@ def test_point_timeseries_value_matches_generator(demo_catalog):
     assert got == pytest.approx(float(expected), abs=1e-6)
 
 
+def _box(w, s, e, n):
+    return [[w, s], [e, s], [e, n], [w, n], [w, s]]
+
+
+DIAMOND = {
+    "type": "Polygon",
+    "coordinates": [[[2.5, 50.85], [3.1, 51.25], [2.5, 51.65], [1.9, 51.25], [2.5, 50.85]]],
+}
+
+
+def _cellwise_counts(cat, var, cells):
+    """(total, valid) per step over the cube rows of ``cells``, joined cell
+    by cell — the run-length plan must give the same counts."""
+    cells_df = cat.spark.createDataFrame(
+        [(int(a), int(b)) for a, b in cells], "lat_idx int, lon_idx int"
+    )
+    rows = (
+        cat.cube("demo").join(cells_df, ["lat_idx", "lon_idx"], "left_semi")
+        .groupBy("time").agg(F.count(F.lit(1)).alias("n"), F.count(var).alias("v"))
+        .orderBy("time").collect()
+    )
+    return [(r["n"], r["v"]) for r in rows]
+
+
 def test_geometry_timeseries_bbox_mask_count(demo_catalog):
     """1°x1° box → all_touched mask = (1/res + 1)^2 cells, the analog of the
     reference's 401x401 = 160801 golden totalCount
-    (test/controllers/test_time_series.py:59-75)."""
+    (test/controllers/test_time_series.py:59-75). For it and for a diamond,
+    a MultiPolygon with a hole and a single-cell polygon, the mask's runs
+    expand back to exactly its cells, and the run-length plan's totalCount
+    and validCount equal a cell-by-cell join's."""
     g = demo_catalog.datasets["demo"].grid
-    poly = {
-        "type": "Polygon",
-        "coordinates": [[[1.0, 51.0], [2.0, 51.0], [2.0, 52.0], [1.0, 52.0], [1.0, 51.0]]],
-    }
+    poly = {"type": "Polygon", "coordinates": [_box(1.0, 51.0, 2.0, 52.0)]}
     cells_per_deg = round(1.0 / g.res_lon)
     expected_total = (cells_per_deg + 1) ** 2
     mask = rasterize_mask(poly, g)
@@ -172,20 +199,89 @@ def test_geometry_timeseries_bbox_mask_count(demo_catalog):
     assert rows[2]["valid_count"] == 0 and rows[2]["average"] is None
     assert rows[0]["valid_count"] == expected_total
 
+    holed = {
+        "type": "MultiPolygon",
+        "coordinates": [
+            [_box(0.5, 50.5, 1.5, 51.5), _box(0.8, 50.8, 1.2, 51.2)],
+            [_box(3.0, 51.5, 3.5, 52.0)],
+        ],
+    }
+    ci, cj = 40, 90
+    clon, clat = g.lon_of(cj), g.lat_of(ci)
+    one_cell = {
+        "type": "Polygon",
+        "coordinates": [_box(clon - 0.005, clat - 0.005, clon + 0.005, clat + 0.005)],
+    }
+    for geom in (poly, DIAMOND, holed, one_cell):
+        mask = rasterize_mask(geom, g)
+        runs = mask_runs(mask)
+        expanded = [(i, j) for i, lo, hi in runs.tolist() for j in range(lo, hi + 1)]
+        assert sorted(expanded) == sorted(map(tuple, mask.tolist()))
+        rows = time_series_for_geometry(demo_catalog, "demo", "conc_tsm", geom).collect()
+        assert [(r["total_count"], r["valid_count"]) for r in rows] == _cellwise_counts(
+            demo_catalog, "conc_tsm", mask
+        )
+        assert all(r["total_count"] == len(mask) for r in rows)
+    # the hole splits rows of the first polygon into two runs each
+    assert len(mask_runs(rasterize_mask(holed, g))) > len(
+        {i for i in rasterize_mask(holed, g)[:, 0].tolist()}
+    )
+    assert mask_runs(rasterize_mask(one_cell, g)).tolist() == [[ci, cj, cj]]
+
+
+def test_geometry_timeseries_plan_prunes_scan_and_broadcasts_runs(demo_catalog):
+    """The geometry and fan-out plans: the cube scan carries the mask's
+    lat_idx/lon_idx bounds as pushed parquet filters, the broadcast side is
+    the runs' LocalTableScan (no RDD built from Python rows), and the
+    result is sorted without a range-partition exchange."""
+    rect = {"type": "Polygon", "coordinates": [_box(1.0, 51.0, 1.5, 51.5)]}
+    for df in (
+        time_series_for_geometry(demo_catalog, "demo", "kd489", DIAMOND),
+        time_series_for_geometry_collection(demo_catalog, "demo", "kd489", [DIAMOND, rect]),
+    ):
+        df.collect()
+        pf = pushed_filters(df)
+        for col in ("lat_idx", "lon_idx"):
+            for op in ("GreaterThanOrEqual", "LessThanOrEqual"):
+                assert f"{op}({col}" in pf, pf
+        plan = executed_plan(df)
+        assert re.search(r"BroadcastExchange [^\n]*\n\s*\+- LocalTableScan ", plan), plan
+        assert "ExistingRDD" not in plan, plan
+        assert "rangepartitioning" not in plan, plan
+
 
 def test_geometry_collection_fanout(demo_catalog):
+    """Two overlapping rectangles and a Point in one job: each
+    geometry_id's rows equal that geometry's own query, and the cells the
+    rectangles share count in both. A collection with no cell in the grid
+    is None, like the single-geometry queries (P7)."""
+    g = demo_catalog.datasets["demo"].grid
     geoms = [
+        {"type": "Polygon", "coordinates": [_box(1.0, 51.0, 1.5, 51.5)]},
+        {"type": "Polygon", "coordinates": [_box(1.25, 51.25, 2.0, 51.75)]},
         {"type": "Point", "coordinates": [2.1, 51.4]},
-        {
-            "type": "Polygon",
-            "coordinates": [[[1.0, 51.0], [1.5, 51.0], [1.5, 51.5], [1.0, 51.5], [1.0, 51.0]]],
-        },
     ]
+    a, b = ({tuple(c) for c in rasterize_mask(geom, g).tolist()} for geom in geoms[:2])
+    assert a & b
     df = time_series_for_geometry_collection(demo_catalog, "demo", "kd489", geoms)
     rows = df.collect()
-    ids = {r["geometry_id"] for r in rows}
-    assert ids == {0, 1}
-    assert len(rows) == 2 * len(DEMO_TIMES)
+    assert {r["geometry_id"] for r in rows} == {0, 1, 2}
+    assert len(rows) == 3 * len(DEMO_TIMES)
+    for gid, geom in enumerate(geoms):
+        single = time_series_for_geometry(demo_catalog, "demo", "kd489", geom).collect()
+        mine = [r for r in rows if r["geometry_id"] == gid]
+        assert [(r["date"], r["total_count"], r["valid_count"]) for r in mine] == [
+            (r["date"], r["total_count"], r["valid_count"]) for r in single
+        ]
+        assert [r["average"] for r in mine] == pytest.approx(
+            [r["average"] for r in single], rel=1e-12
+        )
+    assert rows[0]["total_count"] == len(a) and rows[len(DEMO_TIMES)]["total_count"] == len(b)
+
+    outside = {"type": "Polygon", "coordinates": [_box(-150.0, -30.0, -149.0, -29.0)]}
+    far_point = {"type": "Point", "coordinates": [-150.0, -30.0]}
+    for empty in ([], [outside], [outside, far_point]):
+        assert time_series_for_geometry_collection(demo_catalog, "demo", "kd489", empty) is None
 
 
 def test_time_range_filter(demo_catalog):

@@ -369,6 +369,26 @@ def test_ts_geometries_fanout_endpoint(server):
     assert all(r["result"]["totalCount"] > 1 for r in poly_res["results"])
 
 
+def test_ts_geometries_fanout_outside_grid(server):
+    """Geometries that all miss the grid, or none at all, get one empty
+    series each (P7 per probe)."""
+    box = [[-150.0, -30.0], [-149.0, -30.0], [-149.0, -29.0], [-150.0, -29.0], [-150.0, -30.0]]
+    body = {
+        "type": "GeometryCollection",
+        "geometries": [
+            {"type": "Polygon", "coordinates": [box]},
+            {"type": "Polygon", "coordinates": [[[x + 200.0, y] for x, y in box]]},
+        ],
+    }
+    status, doc = _post_json(f"{server}/ts/demo/conc_chl/geometries", body)
+    assert status == 200 and doc == {"results": [{"results": []}, {"results": []}]}
+    status, doc = _post_json(
+        f"{server}/ts/demo/conc_chl/geometries",
+        {"type": "GeometryCollection", "geometries": []},
+    )
+    assert status == 200 and doc == {"results": []}
+
+
 def test_ts_places_fanout_endpoint(server):
     body = {
         "type": "FeatureCollection",

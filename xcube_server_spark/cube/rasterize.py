@@ -13,7 +13,10 @@ so this is a self-contained numpy implementation with the same contract:
 
 The mask is produced on the driver over the *bbox-clipped index window*
 (small by construction — the reference does the same clip first,
-``controllers/time_series.py:166-175``) and then broadcast for the semi-join.
+``controllers/time_series.py:166-175``). The time-series queries
+(``cube/timeseries.py``) run-length encode it into per-row longitude runs,
+broadcast those into a semi-join on ``lat_idx`` with ``lon_idx`` inside the
+run, and cut the cube scan to the mask's index bbox.
 """
 
 from __future__ import annotations

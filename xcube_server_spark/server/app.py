@@ -365,7 +365,7 @@ class CubeServer:
                 end=q.get("endDate"),
             )
             by_geom = [[] for _ in geoms]
-            for r in df.collect():
+            for r in [] if df is None else df.collect():
                 by_geom[r["geometry_id"]].append(r)
             h._json({"results": [_ts_rows(rows) for rows in by_geom]})
         elif method == "GET" and len(parts) == 4 and parts[0] == "ts" and parts[3] == "point":
