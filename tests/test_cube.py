@@ -19,7 +19,9 @@ from xcube_server_spark.cube.metadata import get_coordinates, get_datasets, get_
 from xcube_server_spark.cube.places import find_places, load_place_group, union_place_groups
 from xcube_server_spark.cube.rasterize import rasterize_mask
 from xcube_server_spark.cube.tiles import TileService, render_tiles
+from xcube_server_spark.cube import timeseries
 from xcube_server_spark.cube.timeseries import (
+    local_time_series,
     mask_runs,
     time_series_for_geometry,
     time_series_for_geometry_collection,
@@ -293,6 +295,175 @@ def test_time_range_filter(demo_catalog):
     assert df.count() == 4
 
 
+def _register_weekly(cat, ident: str) -> None:
+    """Register the reference demo's computed weekly-mean cube of 'demo'
+    (no level table) under ``ident``."""
+    from xcube_server_spark.cube.catalog import DatasetMeta
+
+    if ident not in cat.datasets:
+        base = cat.datasets["demo"]
+        cat.register(DatasetMeta(
+            identifier=ident, title="weekly", base_path="",
+            grid=base.grid, tile_grid=base.tile_grid, variables=base.variables,
+            computed=True, function="resample_in_time",
+            input_datasets=["demo"], input_params={"period": "1W"},
+        ))
+
+
+def _spark_rows(df) -> list[dict]:
+    return [] if df is None else [r.asDict() for r in df.collect()]
+
+
+def _assert_same_rows(local: list[dict], spark: list[dict]) -> None:
+    """Dates and counts exactly, averages to rel 1e-12, None where None."""
+    def without_avg(rows):
+        return [{k: v for k, v in r.items() if k != "average"} for r in rows]
+
+    assert without_avg(local) == without_avg(spark)
+    for a, b in zip(local, spark):
+        if b["average"] is None:
+            assert a["average"] is None
+        else:
+            assert a["average"] == pytest.approx(b["average"], rel=1e-12)
+
+
+HOLED = {
+    "type": "MultiPolygon",
+    "coordinates": [
+        [_box(0.5, 50.5, 1.5, 51.5), _box(0.8, 50.8, 1.2, 51.2)],
+        [_box(3.0, 51.5, 3.5, 52.0)],
+    ],
+}
+
+# startDate/endDate pairs: open, the date form, exact step times in both
+# forms (t1 = 2017-01-25 09:35:51, t3 = 2017-01-28 09:58:11), a bound a
+# second before a step (inside the label slack, dropped by the exact
+# filter), a fraction, and a window with no step
+WINDOWS = [
+    (None, None),
+    ("2017-01-15", "2017-01-29"),
+    ("2017-01-25 09:35:51", "2017-01-28 09:58:11"),
+    ("2017-01-25T09:35:51Z", "2017-01-28T09:58:10Z"),
+    ("2017-01-25 09:35:51.5", None),
+    (None, "2017-01-26"),
+    ("2018-01-01", "2018-02-01"),
+]
+
+
+@pytest.mark.parametrize("start,end", WINDOWS)
+def test_local_point_timeseries_matches_spark(demo_catalog, start, end):
+    """The driver path answers a point exactly like the Spark plan, for
+    every variable (conc_tsm's all-NULL steps: validCount 0, average
+    None) and every window form."""
+    for var in ("conc_chl", "conc_tsm", "kd489"):
+        for lon, lat in ((2.1, 51.4), (0.01, 52.49), (-150.0, -30.0)):
+            local = local_time_series(
+                demo_catalog, "demo", var,
+                [{"type": "Point", "coordinates": [lon, lat]}], start, end,
+            )
+            _assert_same_rows(local, _spark_rows(time_series_for_point(
+                demo_catalog, "demo", var, lon, lat, start, end,
+            )))
+    rows = local_time_series(
+        demo_catalog, "demo", "conc_tsm",
+        [{"type": "Point", "coordinates": [2.1, 51.4]}], start, end,
+    )
+    null_steps = [r for r in rows if r["date"].startswith(("2017-01-26", "2017-01-28"))]
+    assert all(r["valid_count"] == 0 and r["average"] is None for r in null_steps)
+
+
+@pytest.mark.parametrize("start,end", WINDOWS[:4] + WINDOWS[-1:])
+def test_local_geometry_timeseries_matches_spark(demo_catalog, start, end):
+    """Diamond, MultiPolygon with a hole, a one-cell polygon and a
+    rectangle: the single-geometry Spark plan's rows (totalCount is the
+    mask's cell count, A6), on every variable."""
+    g = demo_catalog.datasets["demo"].grid
+    clon, clat = g.lon_of(90), g.lat_of(40)
+    one_cell = {
+        "type": "Polygon",
+        "coordinates": [_box(clon - 0.005, clat - 0.005, clon + 0.005, clat + 0.005)],
+    }
+    rect = {"type": "Polygon", "coordinates": [_box(1.0, 51.0, 2.0, 52.0)]}
+    for var in ("conc_chl", "conc_tsm", "kd489"):
+        for geom in (DIAMOND, HOLED, one_cell, rect):
+            local = local_time_series(demo_catalog, "demo", var, [geom], start, end)
+            spark = _spark_rows(time_series_for_geometry(
+                demo_catalog, "demo", var, geom, start, end,
+            ))
+            _assert_same_rows(local, spark)
+            if start is None:
+                assert local and all(
+                    r["total_count"] == len(rasterize_mask(geom, g)) for r in local
+                )
+
+
+@pytest.mark.parametrize("start,end", [(None, None), ("2017-01-25", "2017-01-28T12:00:00Z")])
+def test_local_fanout_timeseries_matches_spark(demo_catalog, start, end):
+    """Overlapping rectangles, a Point and an out-of-grid polygon: the
+    fan-out plan's rows, shared cells counted in both rectangles."""
+    geoms = [
+        {"type": "Polygon", "coordinates": [_box(1.0, 51.0, 1.5, 51.5)]},
+        {"type": "Polygon", "coordinates": [_box(1.25, 51.25, 2.0, 51.75)]},
+        {"type": "Point", "coordinates": [2.1, 51.4]},
+        {"type": "Polygon", "coordinates": [_box(-150.0, -30.0, -149.0, -29.0)]},
+        DIAMOND,
+    ]
+    for var in ("conc_chl", "conc_tsm", "kd489"):
+        local = local_time_series(
+            demo_catalog, "demo", var, geoms, start, end, collection=True
+        )
+        spark = _spark_rows(time_series_for_geometry_collection(
+            demo_catalog, "demo", var, geoms, start, end,
+        ))
+        _assert_same_rows(local, spark)
+        assert {r["geometry_id"] for r in local} == {0, 1, 2, 4}
+    far = [{"type": "Polygon", "coordinates": [_box(-150.0, -30.0, -149.0, -29.0)]}]
+    for empty in ([], far):
+        assert local_time_series(
+            demo_catalog, "demo", "kd489", empty, collection=True
+        ) == []
+
+
+def test_local_timeseries_declines_to_spark(demo_catalog, monkeypatch):
+    """The driver path returns None, and the routes take the Spark plan,
+    for a computed dataset, a request over DRIVER_MAX_ROWS, a date bound it
+    does not parse and a column that is not a variable; at the constant
+    itself it still answers."""
+    _register_weekly(demo_catalog, "demo-1w-ts")
+    point = {"type": "Point", "coordinates": [2.1, 51.4]}
+    assert local_time_series(demo_catalog, "demo-1w-ts", "kd489", [point]) is None
+    assert demo_catalog.local_parts("demo-1w-ts", 0, [0]) is None
+
+    # the whole fixture grid, all steps: W*H*5 rows
+    whole = {"type": "Polygon", "coordinates": [_box(0.0, 50.0, 5.0, 52.5)]}
+    assert timeseries.DRIVER_MAX_ROWS == 2000 * 1000 * 5
+    monkeypatch.setattr(timeseries, "DRIVER_MAX_ROWS", W * H * len(DEMO_TIMES))
+    assert local_time_series(demo_catalog, "demo", "kd489", [whole]) is not None
+    monkeypatch.setattr(timeseries, "DRIVER_MAX_ROWS", W * H * len(DEMO_TIMES) - 1)
+    assert local_time_series(demo_catalog, "demo", "kd489", [whole]) is None
+    # three steps in the window fit where five do not
+    three = local_time_series(
+        demo_catalog, "demo", "kd489", [whole], "2017-01-25", "2017-01-29"
+    )
+    assert [r["date"][:10] for r in three] == ["2017-01-25", "2017-01-26", "2017-01-28"]
+    for start in ("2017-1-25", "2017-01-25T10:00", "20170125", " 2017-01-25"):
+        assert local_time_series(demo_catalog, "demo", "kd489", [point], start) is None
+    # a column that is not one of the dataset's variables
+    assert local_time_series(demo_catalog, "demo", "lat_idx", [point]) is None
+
+
+def test_local_parts_lists_time_partitions(demo_catalog):
+    """One helper decides whether a level is a local table: the files of
+    the asked time_idx partitions, none for a partition that is absent."""
+    files = demo_catalog.local_parts("demo", 0, [0, 4])
+    assert files and all(
+        "/time_idx=0/" in f or "/time_idx=4/" in f for f in files
+    )
+    assert {f.split("/time_idx=")[1][0] for f in files} == {"0", "4"}
+    assert demo_catalog.local_parts("demo", 0, [99]) == []
+    assert demo_catalog.local_parts("demo", 0, []) == []
+
+
 # -- tiles -------------------------------------------------------------------
 
 
@@ -525,6 +696,36 @@ def test_tile_fast_path_matches_spark_path(demo_catalog):
     fast.get_tile("demo", "conc_chl", 2, 1, 0, time="current")
     dt = _time.perf_counter() - t0
     assert dt < 1.0, f"fast path took {dt:.3f}s"
+
+
+def test_render_tiles_prunes_scan_by_tile_window(demo_catalog):
+    """render_tiles(tiles=[...]) filters on each tile's lat_idx/lon_idx
+    window, so the bounds are parquet PushedFilters for a native dataset
+    and, through its grouping keys, for a computed one; the PNGs are the
+    fast path's and the full-level render's."""
+    _register_weekly(demo_catalog, "demo-1w-tiles")
+    z = demo_catalog.datasets["demo"].tile_grid.num_levels - 1  # level 0, 64-px tiles
+    fast = TileService(demo_catalog, fast_path=True)
+    for ds in ("demo", "demo-1w-tiles"):
+        one = render_tiles(demo_catalog, ds, "kd489", z, tiles=[(1, 0)])
+        rows = one.collect()
+        pf = ",".join(pushed_filters(one))
+        for bound in ("GreaterThanOrEqual(lat_idx,0)", "LessThanOrEqual(lat_idx,63)",
+                      "GreaterThanOrEqual(lon_idx,64)", "LessThanOrEqual(lon_idx,127)"):
+            assert bound in pf, pf
+        two = render_tiles(demo_catalog, ds, "kd489", z, tiles=[(1, 0), (2, 1)])
+        assert "lat_idx" in ",".join(pushed_filters(two))
+        full = {
+            (r["tile_x"], r["tile_y"]): bytes(r["png"])
+            for r in render_tiles(demo_catalog, ds, "kd489", z).collect()
+        }
+        assert [(r["tile_x"], r["tile_y"]) for r in rows] == [(1, 0)]
+        assert bytes(rows[0]["png"]) == full[(1, 0)]
+        assert {
+            (r["tile_x"], r["tile_y"]): bytes(r["png"]) for r in two.collect()
+        } == {k: full[k] for k in ((1, 0), (2, 1))}
+        if ds == "demo":
+            assert full[(1, 0)] == fast.get_tile(ds, "kd489", z, 1, 0)
 
 
 def test_batched_point_timeseries_matches_single(demo_catalog):

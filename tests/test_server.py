@@ -16,7 +16,7 @@ from xcube_server_spark.sources.png import decode_rgba_png
 
 
 @pytest.fixture(scope="module")
-def server(spark, tmp_path_factory):
+def live(spark, tmp_path_factory):
     base = str(tmp_path_factory.mktemp("srv") / "demo")
     cube, grid = synth_demo_cube(spark, width=64, height=32)
     _, tg = write_cube(cube, grid, base, tile_size=32)
@@ -38,8 +38,13 @@ def server(spark, tmp_path_factory):
     places = load_place_group(spark, "pts", str(d / "pts.geojson"))
     srv = CubeServer(cat, places=places)
     srv.start()
-    yield f"http://127.0.0.1:{srv.port}"
+    yield srv
     srv.stop()
+
+
+@pytest.fixture(scope="module")
+def server(live):
+    return f"http://127.0.0.1:{live.port}"
 
 
 def _get(url: str):
@@ -523,3 +528,121 @@ def test_places_query_modes_parity(server):
         raise AssertionError("expected 400")
     except urllib.error.HTTPError as e:
         assert e.code == 400
+
+
+def _weekly(cat, ident: str = "demo-1w") -> None:
+    """Register the reference demo's computed weekly-mean cube of 'demo'."""
+    from xcube_server_spark.cube.catalog import DatasetMeta
+
+    if ident not in cat.datasets:
+        base = cat.datasets["demo"]
+        cat.register(DatasetMeta(
+            identifier=ident, title="weekly", base_path="",
+            grid=base.grid, tile_grid=base.tile_grid, variables=base.variables,
+            computed=True, function="resample_in_time",
+            input_datasets=["demo"], input_params={"period": "1W"},
+        ))
+
+
+def test_wmts_get_feature_info_computed_dataset(live, server):
+    """GetFeatureInfo on a computed dataset reads the cell through the
+    catalog's computed frame (it has no level table): the week ending
+    2017-01-29 is the mean of the three input steps inside it."""
+    _weekly(live.catalog)
+    kvp = ("/wmts/kvp?Service=WMTS&Request=GetFeatureInfo&Layer={layer}"
+           "&TileMatrix=1&TileCol=0&TileRow=0&I=5&J=7&Time={time}")
+    status, info = _get_json(server + kvp.format(
+        layer="demo-1w.kd489", time="2017-01-29%2000:00:00"))
+    assert status == 200, info
+    assert info["time"] == "2017-01-29 00:00:00"
+    inputs = []
+    for t in ("2017-01-25", "2017-01-26", "2017-01-28"):
+        status, one = _get_json(server + kvp.format(layer="demo.kd489", time=t))
+        assert status == 200 and one["time"].startswith(t)
+        inputs.append(one["value"])
+    assert info["value"] == pytest.approx(sum(inputs) / 3, abs=1e-5)
+
+
+TS_REQUESTS = [
+    ("GET", "/ts/{ds}/conc_tsm/point?lon=2.1&lat=51.4", None),
+    ("GET", "/ts/{ds}/conc_tsm/point?lon=2.1&lat=51.4&startDate=2017-01-20", None),
+    ("POST", "/ts/{ds}/kd489/geometry", {
+        "type": "Polygon",
+        "coordinates": [[[1.0, 51.0], [2.0, 51.0], [2.0, 52.0], [1.0, 52.0], [1.0, 51.0]]],
+    }),
+    ("POST", "/ts/{ds}/conc_chl/geometries?endDate=2017-01-28T09:58:11Z", {
+        "type": "GeometryCollection",
+        "geometries": [
+            {"type": "Point", "coordinates": [2.0, 51.5]},
+            {"type": "Polygon", "coordinates": [[
+                [1.0, 51.0], [3.0, 51.0], [3.0, 52.0], [1.0, 52.0], [1.0, 51.0],
+            ]]},
+        ],
+    }),
+    ("POST", "/ts/{ds}/conc_chl/places", {
+        "type": "FeatureCollection",
+        "features": [{"type": "Feature", "properties": {},
+                      "geometry": {"type": "Point", "coordinates": [2.0, 51.5]}}],
+    }),
+]
+
+
+def _ts_request(server, method, path, body):
+    if method == "GET":
+        return _get_json(server + path)
+    return _post_json(server + path, body)
+
+
+def test_ts_routes_answer_local_cube_without_spark(live, server, monkeypatch):
+    """The point, geometry and fan-out routes answer a local cube on the
+    driver: no Spark job runs, and the answers equal the Spark plans'. A
+    computed dataset still takes the Spark plans."""
+    from xcube_server_spark.server import app
+
+    def answers():
+        return [_ts_request(server, m, p.format(ds="demo"), b)
+                for m, p, b in TS_REQUESTS]
+
+    with monkeypatch.context() as m:
+        m.setattr(app, "local_time_series", lambda *a, **k: None)
+        spark_answers = answers()
+    tracker = live.catalog.spark.sparkContext.statusTracker()
+    last_job = max(tracker.getJobIdsForGroup(None), default=-1)
+    assert last_job >= 0  # the Spark plans' jobs are visible here
+
+    def no_spark(*args, **kwargs):
+        raise AssertionError("Spark time-series plan used for a local cube")
+
+    with monkeypatch.context() as m:
+        for name in ("time_series_for_point", "time_series_for_geometry",
+                     "time_series_for_geometry_collection"):
+            m.setattr(app, name, no_spark)
+        driver_answers = answers()
+    assert max(tracker.getJobIdsForGroup(None), default=-1) == last_job
+
+    def series(doc):
+        """(date, totalCount, validCount) rows and the averages of a TS
+        answer (a fan-out's series one after another)."""
+        parts = doc["results"]
+        if parts and "date" not in parts[0]:
+            parts = [r for p in parts for r in p["results"]]
+        return ([(r["date"], r["result"]["totalCount"], r["result"]["validCount"])
+                 for r in parts], [r["result"]["average"] for r in parts])
+
+    for (s_status, s_doc), (d_status, d_doc) in zip(spark_answers, driver_answers):
+        assert s_status == d_status == 200
+        (s_rows, s_avg), (d_rows, d_avg) = series(s_doc), series(d_doc)
+        assert d_rows == s_rows and d_rows
+        assert [a is None for a in d_avg] == [a is None for a in s_avg]
+        assert [a for a in d_avg if a is not None] == pytest.approx(
+            [a for a in s_avg if a is not None], rel=1e-12)
+        if s_doc["results"] and "date" not in s_doc["results"][0]:
+            assert [len(p["results"]) for p in d_doc["results"]] == [
+                len(p["results"]) for p in s_doc["results"]]
+
+    _weekly(live.catalog)
+    status, doc = _get_json(f"{server}/ts/demo-1w/kd489/point?lon=2.1&lat=51.4")
+    assert status == 200
+    assert [r["date"] for r in doc["results"]] == [
+        "2017-01-22T00:00:00Z", "2017-01-29T00:00:00Z", "2017-02-05T00:00:00Z",
+    ]

@@ -18,11 +18,12 @@ from __future__ import annotations
 
 import json
 import os
+from collections.abc import Iterable
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.paths import join_store_path, open_store_text
+from ..sources.paths import join_store_path, local_part_glob, open_store_text
 from .grid import GridMeta, TileGridMeta
 
 _RAW_SUFFIXES = (".zarr", ".levels", ".nc", ".nc4", ".h5", ".hdf5", ".tif", ".tiff")
@@ -221,6 +222,28 @@ class CubeCatalog:
         if "://" not in target and not os.path.isabs(target):
             target = join_store_path(meta.base_path, target)
         return target
+
+    def local_parts(
+        self, identifier: str, level: int, t_idx: Iterable[int]
+    ) -> list[str] | None:
+        """Parquet files of the ``time_idx`` partitions ``t_idx`` of one
+        level, for a driver-side pyarrow read; None when the level is not a
+        local parquet table. Computed datasets have no table, and
+        object-store levels (``s3a://...``) are read by Spark, which is
+        scheme-agnostic. ``level_path`` follows a ``.link`` pointer, so a
+        grafted level is local when its target is. A partition with no file
+        adds nothing to the list."""
+        meta = self.datasets[identifier]
+        if meta.computed or not meta.base_path:
+            return None
+        level_dir = self.level_path(identifier, level)
+        if not local_part_glob(level_dir):
+            return None
+        return [
+            f
+            for t in t_idx
+            for f in sorted(local_part_glob(f"{level_dir}/time_idx={t}/*.parquet"))
+        ]
 
     def cube(self, identifier: str, level: int = 0) -> DataFrame:
         """DataFrame of one LOD level (P2 level projection,

@@ -29,7 +29,8 @@ from pyspark.sql import functions as F
 from ..functions.colormap import DEFAULT_CMAP, apply_cmap
 from ..sources.png import encode_rgba_png
 from .cache import ByteCache, FileByteCache
-from .catalog import CubeCatalog, StyleMeta
+from .catalog import CubeCatalog, DatasetMeta, StyleMeta
+from .grid import level_sizes
 
 
 def _nearest_time(times: list[str], probe: str | None) -> tuple[int, str]:
@@ -97,6 +98,35 @@ def _render_pdf_factory(
     return render
 
 
+def _level_height(meta: DatasetMeta, level: int) -> int:
+    tg = meta.tile_grid
+    return level_sizes(meta.grid.width, meta.grid.height, tg.num_levels)[level][1]
+
+
+def _disp_row(meta: DatasetMeta, level: int, lat_idx):
+    """Display row (0 = north) of storage ``lat_idx``, a Column or an
+    array: the T3 flip for inv_y grids."""
+    if meta.grid.inv_y:
+        return (_level_height(meta, level) - 1) - lat_idx
+    return lat_idx
+
+
+def tile_window(
+    meta: DatasetMeta, level: int, x: int, y: int
+) -> tuple[int, int, int, int]:
+    """Inclusive storage index bounds ``(lat_lo, lat_hi, lon_lo, lon_hi)``
+    of tile (x, y) at ``level``: display rows ``[y*th, (y+1)*th)``, flipped
+    for inv_y grids."""
+    tg = meta.tile_grid
+    th, tw = tg.tile_height, tg.tile_width
+    if meta.grid.inv_y:
+        h_level = _level_height(meta, level)
+        lat_lo, lat_hi = h_level - (y + 1) * th, h_level - y * th - 1
+    else:
+        lat_lo, lat_hi = y * th, (y + 1) * th - 1
+    return lat_lo, lat_hi, x * tw, (x + 1) * tw - 1
+
+
 def render_tiles(
     catalog: CubeCatalog,
     ds_id: str,
@@ -119,25 +149,22 @@ def render_tiles(
     df = cube.filter(F.col("time_idx") == t_idx).select(
         "lat_idx", "lon_idx", var
     )
+    if tiles is not None:
+        # index windows, not the derived tile_x/tile_y: parquet can prune
+        # on them, and a computed cube passes them through its grouping
+        pred = None
+        for tx, ty in tiles:
+            lat_lo, lat_hi, lon_lo, lon_hi = tile_window(meta, level, tx, ty)
+            this = F.col("lat_idx").between(lat_lo, lat_hi) & F.col(
+                "lon_idx"
+            ).between(lon_lo, lon_hi)
+            pred = this if pred is None else (pred | this)
+        df = df.filter(pred)
     tw, th = tg.tile_width, tg.tile_height
-    from .grid import level_sizes
-
-    h_level = level_sizes(meta.grid.width, meta.grid.height, tg.num_levels)[level][1]
-    disp = (
-        (F.lit(h_level - 1) - F.col("lat_idx"))
-        if meta.grid.inv_y
-        else F.col("lat_idx")
-    )
-    df = df.withColumn("disp_row", disp)
+    df = df.withColumn("disp_row", _disp_row(meta, level, F.col("lat_idx")))
     df = df.withColumn("tile_y", (F.col("disp_row") / th).cast("int")).withColumn(
         "tile_x", (F.col("lon_idx") / tw).cast("int")
     )
-    if tiles is not None:
-        pred = None
-        for tx, ty in tiles:
-            this = (F.col("tile_x") == tx) & (F.col("tile_y") == ty)
-            pred = this if pred is None else (pred | this)
-        df = df.filter(pred)
     return df.groupBy("tile_y", "tile_x").applyInPandas(
         _render_pdf_factory(tw, th, vmin, vmax, st.color_bar, var),
         "tile_y int, tile_x int, png binary, rgba_sum long",
@@ -185,67 +212,32 @@ class TileService:
             else None
         )
 
-    def _local_part(self, ds_id: str, level: int, t_idx: int):
-        """pyarrow dataset of one ``time_idx`` partition of a level, or None
-        when the level has no local parquet table to read on the driver.
-
-        Driver-side pyarrow is a LOCAL-store fast path; computed datasets and
-        object-store levels (s3a://...) return None and take the
-        scheme-agnostic Spark read. level_path follows a `.link` pointer, so
-        grafted levels keep the fast path as long as the target is a local
-        table.
-        """
-        import pyarrow.dataset as pads
-
-        from ..sources.paths import local_part_glob
-
-        meta = self.catalog.datasets[ds_id]
-        if meta.computed or not meta.base_path:
-            return None
-        part_dir = f"{self.catalog.level_path(ds_id, level)}/time_idx={t_idx}"
-        if not local_part_glob(part_dir):
-            return None
-        return pads.dataset(part_dir, format="parquet")
-
     def _read_tile_fast(
         self, ds_id: str, var: str, z: int, x: int, y: int, t_idx: int
     ) -> "pd.DataFrame | None":
         """pyarrow read of one tile window: partition-dir pruning on
-        time_idx + row-group predicate pruning on (lat_idx, lon_idx)."""
+        time_idx + row-group predicate pruning on (lat_idx, lon_idx); None
+        when the level is not a local table."""
         import pyarrow.dataset as pads
 
-        from .grid import level_sizes
-
         meta = self.catalog.datasets[ds_id]
-        tg = meta.tile_grid
-        level = tg.level_for_zoom(z)
-        dataset = self._local_part(ds_id, level, t_idx)
-        if dataset is None:
+        level = meta.tile_grid.level_for_zoom(z)
+        files = self.catalog.local_parts(ds_id, level, [t_idx])
+        if not files:
             return None
-        h_level = level_sizes(meta.grid.width, meta.grid.height, tg.num_levels)[level][1]
-        # display rows [y*th, (y+1)*th) -> storage lat_idx range (flipped
-        # for inv_y grids)
-        if meta.grid.inv_y:
-            lat_lo = h_level - (y + 1) * tg.tile_height
-            lat_hi = h_level - y * tg.tile_height  # exclusive
-        else:
-            lat_lo = y * tg.tile_height
-            lat_hi = (y + 1) * tg.tile_height
+        lat_lo, lat_hi, lon_lo, lon_hi = tile_window(meta, level, x, y)
         f = pads.field
         filt = (
             (f("lat_idx") >= lat_lo)
-            & (f("lat_idx") < lat_hi)
-            & (f("lon_idx") >= x * tg.tile_width)
-            & (f("lon_idx") < (x + 1) * tg.tile_width)
+            & (f("lat_idx") <= lat_hi)
+            & (f("lon_idx") >= lon_lo)
+            & (f("lon_idx") <= lon_hi)
         )
-        table = dataset.to_table(
+        table = pads.dataset(files, format="parquet").to_table(
             columns=["lat_idx", "lon_idx", var], filter=filt
         )
         pdf = table.to_pandas()
-        if meta.grid.inv_y:
-            pdf["disp_row"] = (h_level - 1) - pdf["lat_idx"]
-        else:
-            pdf["disp_row"] = pdf["lat_idx"]
+        pdf["disp_row"] = _disp_row(meta, level, pdf["lat_idx"])
         return pdf
 
     def get_tile(
@@ -349,8 +341,6 @@ class TileService:
         """
         import math
 
-        from .grid import level_sizes
-
         meta = self.catalog.datasets[ds_id]
         tg = meta.tile_grid
         if not 0 <= z < tg.num_levels:
@@ -395,12 +385,15 @@ class TileService:
         t_idx: int,
     ) -> float | None:
         """One-cell read: pyarrow fast path, Spark fallback."""
-        dataset = self._local_part(ds_id, level, t_idx) if self.fast_path else None
-        if dataset is not None:
+        files = (
+            self.catalog.local_parts(ds_id, level, [t_idx])
+            if self.fast_path else None
+        )
+        if files:
             import pyarrow.dataset as pads
 
             f = pads.field
-            table = dataset.to_table(
+            table = pads.dataset(files, format="parquet").to_table(
                 columns=[var],
                 filter=(f("lat_idx") == lat_idx) & (f("lon_idx") == col),
             )
@@ -408,11 +401,9 @@ class TileService:
                 return None
             v = table.column(var)[0].as_py()
             return float(v) if v is not None else None
-        df = self.catalog.spark.read.parquet(
-            self.catalog.level_path(ds_id, level)
-        )
         rows = (
-            df.filter(
+            self.catalog.cube(ds_id, level)
+            .filter(
                 (F.col("time_idx") == t_idx)
                 & (F.col("lat_idx") == lat_idx)
                 & (F.col("lon_idx") == col)

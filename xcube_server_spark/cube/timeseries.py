@@ -6,7 +6,25 @@ Reference entry points:
 - geometry TS: ``_get_time_series_for_geometry`` — ``:148-205``
 - collection fan-out: ``:208-219``
 
-Spark plans:
+Two evaluators give the same rows.
+
+Driver path (``local_time_series``), used by the HTTP routes when level 0
+is a local parquet table: the reference answers time series in-process
+from xarray/dask, in the latency class of its tile reads (SURVEY.md §7.3-7),
+and so does this path, like the tile fast path. One pyarrow read takes the
+``time_idx`` partitions whose step falls in the window and, within them,
+the rows inside any geometry's index bbox (one bbox term per geometry, so
+scattered fan-out rectangles do not read the grid between them). Each
+geometry's cells then select their rows through a boolean grid over its
+bbox, and the kept rows are counted and summed per ``time`` step. A
+request takes the Spark plan instead when the dataset is computed or on an
+object store, when a date bound is not one of the forms parsed here, when
+the session time zone is not UTC, when ``var`` is not one of the dataset's
+variables, or when it would touch more than ``DRIVER_MAX_ROWS`` rows (bbox
+cells × steps in the window).
+
+Spark plans (the ``time_series_for_*`` functions; batch callers, the
+registry oracles and every request the driver path declines):
 - point: nearest grid index computed on the driver from grid metadata (P5 as
   index arithmetic — no window function, no shuffle), equality filter pushed
   into the parquet scan, groupBy('time') over ≤|timesteps| rows.
@@ -24,6 +42,11 @@ Spark plans:
   one partition (``coalesce(1).sortWithinPartitions``) instead of by a
   global sort, whose range partitioning costs a sampling job.
 
+Counts on both paths: a point's and a fan-out geometry's ``total_count`` is
+the rows present per step (a cell shared by two fan-out geometries counts
+in both); a single polygon's is its mask's cell count (A6). A step with no
+row in the mask gives no output row.
+
 Known reference inconsistency (SURVEY.md §7.3-2): the reference's polygon
 ``average`` is computed over the *bbox* subset while ``validCount`` counts
 the *masked* subset (``time_series.py:191-193``). We implement the
@@ -32,8 +55,15 @@ consistent masked semantics for both and document the divergence here.
 
 from __future__ import annotations
 
+import datetime as _dt
+import functools
+import operator
+import re
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.dataset as pads
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
@@ -42,6 +72,23 @@ from ..functions.scalars import iso_ts
 from .catalog import CubeCatalog
 from .grid import GridMeta
 from .rasterize import Geometry, geometry_bbox, rasterize_mask
+
+# Rows a driver-side read may touch: the cells of the geometries' index
+# bboxes times the steps in the window. The demo cube's whole level 0,
+# 2000 × 1000 cells × 5 steps = 10M rows (about 200 MB of time, index and
+# value columns in the driver), is the largest request the driver answers;
+# a larger one takes the Spark plan, which scales to the 100 TB cube.
+DRIVER_MAX_ROWS = 2000 * 1000 * 5
+
+_NS = 1_000_000_000
+_UTC_ZONES = ("UTC", "Etc/UTC", "GMT", "Etc/GMT", "Z")
+# the startDate/endDate forms the driver parses the way Spark's
+# to_timestamp does: a date, or a date and time with up to six fraction
+# digits and an optional Z; any other string takes the Spark plan
+_BOUND = re.compile(
+    r"(\d{4})-(\d{2})-(\d{2})"
+    r"(?:[T ](\d{2}):(\d{2}):(\d{2})(?:\.(\d{1,6}))?Z?)?"
+)
 
 
 def _time_window(df: DataFrame, start: str | None, end: str | None) -> DataFrame:
@@ -224,3 +271,155 @@ def time_series_for_geometry_collection(
         var,
         keys=("geometry_id",),
     )
+
+
+def _bound_ns(text: str) -> int:
+    """Nanoseconds since the epoch (UTC) of a ``startDate``/``endDate``
+    value; ValueError for a form the driver does not parse."""
+    m = _BOUND.fullmatch(text)
+    if m is None:
+        raise ValueError(text)
+    y, mo, d, hh, mi, ss, frac = m.groups()
+    t = _dt.datetime(
+        int(y), int(mo), int(d), int(hh or 0), int(mi or 0), int(ss or 0),
+        tzinfo=_dt.timezone.utc,
+    )
+    us = int((frac or "0").ljust(6, "0"))
+    return int(t.timestamp()) * _NS + us * 1000
+
+
+def _steps_in(times: tuple[str, ...], lo: int | None, hi: int | None) -> list[int]:
+    """``time_idx`` of the steps whose label falls in [lo, hi]. Labels carry
+    whole seconds, so each bound gets a second of slack; the read applies
+    the exact bounds to the stored ``time`` values. ValueError for a label
+    numpy cannot parse."""
+    ns = np.array(times, dtype="datetime64[ns]").astype(np.int64)
+    keep = np.ones(len(ns), dtype=bool)
+    if lo is not None:
+        keep &= ns >= lo - _NS
+    if hi is not None:
+        keep &= ns <= hi + _NS
+    return np.flatnonzero(keep).tolist()
+
+
+def _area(box: tuple[int, int, int, int]) -> int:
+    """Cells of an inclusive (lat_lo, lon_lo, lat_hi, lon_hi) index box."""
+    i0, j0, i1, j1 = box
+    return (i1 - i0 + 1) * (j1 - j0 + 1)
+
+
+def _rows_in(
+    table: pa.Table, cells: np.ndarray, box: tuple[int, int, int, int], alone: bool
+) -> np.ndarray | None:
+    """Which rows of a read lie in one geometry's ``cells`` (bbox ``box``):
+    a boolean grid of the cells over the bbox, looked up at each row's
+    index. None when every row does: the read's only bbox, which the cells
+    fill. ``alone=False`` means the read also holds other bboxes' rows."""
+    i0, j0, i1, j1 = box
+    full = len(cells) == _area(box)
+    if alone and full:
+        return None
+    lat = table.column("lat_idx").to_numpy()
+    lon = table.column("lon_idx").to_numpy()
+    if alone:
+        rows = np.arange(len(lat))
+    else:
+        rows = np.flatnonzero((lat >= i0) & (lat <= i1) & (lon >= j0) & (lon <= j1))
+    keep = np.zeros(len(lat), dtype=bool)
+    if full:
+        keep[rows] = True
+    else:
+        grid = np.zeros((i1 - i0 + 1, j1 - j0 + 1), dtype=bool)
+        grid[cells[:, 0] - i0, cells[:, 1] - j0] = True
+        keep[rows] = grid[lat[rows] - i0, lon[rows] - j0]
+    return keep
+
+
+def local_time_series(
+    catalog: CubeCatalog,
+    ds_id: str,
+    var: str,
+    geometries: list[Geometry],
+    start: str | None = None,
+    end: str | None = None,
+    collection: bool = False,
+) -> list[dict] | None:
+    """Point, geometry or fan-out time series of a local cube, evaluated
+    on the driver: the rows the ``time_series_for_*`` plans collect, as
+    dicts. One geometry answers ``time_series_for_geometry`` (a Point is the
+    point query); ``collection=True`` answers
+    ``time_series_for_geometry_collection`` and adds ``geometry_id``.
+
+    Returns None when the request must take the Spark plan (see the module
+    docstring), and ``[]`` without a read when no geometry has a cell in
+    the grid (P7) or no step is in the window.
+    """
+    meta = catalog.datasets[ds_id]
+    if var not in meta.variables:
+        return None  # the Spark plan reads or rejects any other column
+    if catalog.spark.conf.get("spark.sql.session.timeZone") not in _UTC_ZONES:
+        return None
+    try:
+        lo = None if start is None else _bound_ns(start)
+        hi = None if end is None else _bound_ns(end)
+        steps = _steps_in(meta.grid.times, lo, hi)
+    except ValueError:
+        return None
+    files = catalog.local_parts(ds_id, 0, steps)
+    if files is None:
+        return None
+    probes = []
+    for gi, geom in enumerate(geometries):
+        cells = _cells(geom, meta.grid)
+        if len(cells):
+            counted = collection or geom["type"] == "Point"
+            probes.append((gi, cells, None if counted else len(cells)))
+    if not probes or not files:
+        return []
+    boxes = [
+        (*cells.min(axis=0).tolist(), *cells.max(axis=0).tolist())
+        for _, cells, _ in probes
+    ]
+    distinct = set(boxes)
+    if sum(map(_area, distinct)) * len(steps) > DRIVER_MAX_ROWS:
+        return None
+
+    dataset = pads.dataset(files, format="parquet")
+    f = pads.field
+    filt = functools.reduce(operator.or_, [
+        (f("lat_idx") >= i0) & (f("lat_idx") <= i1)
+        & (f("lon_idx") >= j0) & (f("lon_idx") <= j1)
+        for i0, j0, i1, j1 in sorted(distinct)
+    ])
+    ns_type = pa.timestamp("ns", dataset.schema.field("time").type.tz)
+    if lo is not None:
+        filt &= f("time") >= pa.scalar(lo, ns_type)
+    if hi is not None:
+        filt &= f("time") <= pa.scalar(hi, ns_type)
+    table = dataset.to_table(columns=["time", "lat_idx", "lon_idx", var], filter=filt)
+    values = table.select(["time", var])
+    out = []
+    for (gi, cells, total), box in zip(probes, boxes):
+        keep = _rows_in(table, cells, box, alone=len(distinct) == 1)
+        kept = values if keep is None else values.filter(pa.array(keep))
+        per_step = kept.group_by("time").aggregate(
+            [([], "count_all"), (var, "count"), (var, "sum")]
+        ).sort_by("time")
+        # iso_ts: round to the second, half up
+        ns = per_step.column("time").cast(ns_type).cast(pa.int64()).to_numpy()
+        dates = np.datetime_as_string(((ns + _NS // 2) // _NS).astype("datetime64[s]"))
+        for date, n_all, n_valid, var_sum in zip(
+            dates.tolist(),
+            per_step.column("count_all").to_pylist(),
+            per_step.column(f"{var}_count").to_pylist(),
+            per_step.column(f"{var}_sum").to_pylist(),
+        ):
+            row = {"geometry_id": gi} if collection else {}
+            row.update(
+                date=f"{date}Z",
+                total_count=n_all if total is None else total,
+                valid_count=n_valid,
+                average=var_sum / n_valid if n_valid else None,
+            )
+            out.append(row)
+    return out

@@ -17,11 +17,16 @@ Routes (reference handler in parens):
 - ``GET /ts``                                         (GetTimeSeriesInfoHandler)
 - ``GET /ts/{ds}/{var}/point?lon=&lat=[&startDate=&endDate=]``
 - ``POST /ts/{ds}/{var}/geometry`` (GeoJSON geometry body)
-- ``POST /ts/{ds}/{var}/geometries`` (GeometryCollection body, one-job fan-out)
+- ``POST /ts/{ds}/{var}/geometries`` (GeometryCollection body, one fan-out)
 - ``POST /ts/{ds}/{var}/places`` (FeatureCollection body, same fan-out)
 - ``GET /places``                                     (place-group inventory)
 - ``GET /places/{collection}[?bbox=w,s,e,n][&expr=...]``
 - ``GET /places/{collection}/{ds}``                   (dataset-bounds filter)
+
+The ``/ts`` routes answer a local cube on the driver
+(``cube.timeseries.local_time_series``, one pyarrow read, no Spark job) and
+fall back to the Spark plans (``time_series_for_*``) for computed or
+object-store datasets and for requests the driver path declines.
 
 Threading model: the reference moves work off the event loop into executor
 threads (``xcube_server/handlers.py:165`` etc.); here ``ThreadingHTTPServer``
@@ -52,6 +57,7 @@ from ..cube.places import find_places
 from ..cube.reqparams import parse_query_geometry, to_float, to_int
 from ..cube.tiles import TileService
 from ..cube.timeseries import (
+    local_time_series,
     time_series_for_geometry,
     time_series_for_geometry_collection,
     time_series_for_point,
@@ -63,7 +69,8 @@ from .wmts import get_wmts_capabilities_xml, parse_kvp
 
 def _ts_rows(rows) -> dict:
     """Reference TS response shape (``controllers/time_series.py:135-145``)
-    of collected (date, total_count, valid_count, average) rows."""
+    of (date, total_count, valid_count, average) rows: collected Spark rows
+    or the driver path's dicts."""
     return {
         "results": [
             {
@@ -77,6 +84,11 @@ def _ts_rows(rows) -> dict:
             for r in rows
         ]
     }
+
+
+def _collect(df) -> list:
+    """Rows of a time-series plan; None (P7, nothing to read) is none."""
+    return [] if df is None else df.collect()
 
 
 def _read_json(h, empty: bytes = b"{}"):
@@ -348,7 +360,8 @@ class CubeServer:
         elif method == "GET" and parts == ["ts"]:
             h._json(get_time_series_info(self.catalog))
         elif method == "POST" and len(parts) == 4 and parts[0] == "ts" and parts[3] in ("geometries", "places"):
-            # geometry-collection / feature-collection fan-out (U2): one job
+            # geometry-collection / feature-collection fan-out (U2): one
+            # read or one job
             body = _read_json(h)
             if parts[3] == "geometries":
                 geoms = body.get("geometries", [])
@@ -356,40 +369,40 @@ class CubeServer:
                 geoms = [
                     f["geometry"] for f in body.get("features", []) if f.get("geometry")
                 ]
-            df = time_series_for_geometry_collection(
-                self.catalog,
-                parts[1],
-                parts[2],
-                geometries=geoms,
-                start=q.get("startDate"),
-                end=q.get("endDate"),
+            ds, var = parts[1], parts[2]
+            start, end = q.get("startDate"), q.get("endDate")
+            rows = local_time_series(
+                self.catalog, ds, var, geoms, start, end, collection=True
             )
+            if rows is None:
+                rows = _collect(time_series_for_geometry_collection(
+                    self.catalog, ds, var, geometries=geoms, start=start, end=end,
+                ))
             by_geom = [[] for _ in geoms]
-            for r in [] if df is None else df.collect():
+            for r in rows:
                 by_geom[r["geometry_id"]].append(r)
             h._json({"results": [_ts_rows(rows) for rows in by_geom]})
         elif method == "GET" and len(parts) == 4 and parts[0] == "ts" and parts[3] == "point":
-            df = time_series_for_point(
-                self.catalog,
-                parts[1],
-                parts[2],
-                lon=to_float("lon", q["lon"]),
-                lat=to_float("lat", q["lat"]),
-                start=q.get("startDate"),
-                end=q.get("endDate"),
-            )
-            h._json(_ts_rows([] if df is None else df.collect()))
+            ds, var = parts[1], parts[2]
+            lon, lat = to_float("lon", q["lon"]), to_float("lat", q["lat"])
+            start, end = q.get("startDate"), q.get("endDate")
+            point = {"type": "Point", "coordinates": [lon, lat]}
+            rows = local_time_series(self.catalog, ds, var, [point], start, end)
+            if rows is None:
+                rows = _collect(time_series_for_point(
+                    self.catalog, ds, var, lon=lon, lat=lat, start=start, end=end,
+                ))
+            h._json(_ts_rows(rows))
         elif method == "POST" and len(parts) == 4 and parts[0] == "ts" and parts[3] == "geometry":
             geom = parse_query_geometry(body=_read_json(h))
-            df = time_series_for_geometry(
-                self.catalog,
-                parts[1],
-                parts[2],
-                geometry=geom,
-                start=q.get("startDate"),
-                end=q.get("endDate"),
-            )
-            h._json(_ts_rows([] if df is None else df.collect()))
+            ds, var = parts[1], parts[2]
+            start, end = q.get("startDate"), q.get("endDate")
+            rows = local_time_series(self.catalog, ds, var, [geom], start, end)
+            if rows is None:
+                rows = _collect(time_series_for_geometry(
+                    self.catalog, ds, var, geometry=geom, start=start, end=end,
+                ))
+            h._json(_ts_rows(rows))
         elif method == "GET" and parts == ["places"]:
             # place-group inventory (xcube_server/context.py:297-303)
             if self._live_places() is None:
