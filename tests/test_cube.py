@@ -427,8 +427,8 @@ def test_local_fanout_timeseries_matches_spark(demo_catalog, start, end):
 def test_local_timeseries_declines_to_spark(demo_catalog, monkeypatch):
     """The driver path returns None, and the routes take the Spark plan,
     for a computed dataset, a request over DRIVER_MAX_ROWS, a date bound it
-    does not parse and a column that is not a variable; at the constant
-    itself it still answers."""
+    does not parse, a column that is not a variable and a fan-out over
+    DRIVER_MAX_GEOMETRIES; at either constant itself it still answers."""
     _register_weekly(demo_catalog, "demo-1w-ts")
     point = {"type": "Point", "coordinates": [2.1, 51.4]}
     assert local_time_series(demo_catalog, "demo-1w-ts", "kd489", [point]) is None
@@ -450,6 +450,19 @@ def test_local_timeseries_declines_to_spark(demo_catalog, monkeypatch):
         assert local_time_series(demo_catalog, "demo", "kd489", [point], start) is None
     # a column that is not one of the dataset's variables
     assert local_time_series(demo_catalog, "demo", "lat_idx", [point]) is None
+    # a fan-out over DRIVER_MAX_GEOMETRIES geometries with cells
+    g = demo_catalog.datasets["demo"].grid
+    points = [
+        {"type": "Point", "coordinates": [g.lon_of(j), g.lat_of(j % H)]}
+        for j in range(timeseries.DRIVER_MAX_GEOMETRIES + 1)
+    ]
+    far = {"type": "Point", "coordinates": [-150.0, -30.0]}
+    assert local_time_series(
+        demo_catalog, "demo", "kd489", points, collection=True
+    ) is None
+    assert len(local_time_series(
+        demo_catalog, "demo", "kd489", points[1:] + [far], collection=True
+    )) == timeseries.DRIVER_MAX_GEOMETRIES * len(DEMO_TIMES)
 
 
 def test_local_parts_lists_time_partitions(demo_catalog):

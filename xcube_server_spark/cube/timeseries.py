@@ -20,8 +20,9 @@ bbox, and the kept rows are counted and summed per ``time`` step. A
 request takes the Spark plan instead when the dataset is computed or on an
 object store, when a date bound is not one of the forms parsed here, when
 the session time zone is not UTC, when ``var`` is not one of the dataset's
-variables, or when it would touch more than ``DRIVER_MAX_ROWS`` rows (bbox
-cells × steps in the window).
+variables, when it would touch more than ``DRIVER_MAX_ROWS`` rows (bbox
+cells × steps in the window), or when a fan-out holds more than
+``DRIVER_MAX_GEOMETRIES`` geometries with cells in the grid.
 
 Spark plans (the ``time_series_for_*`` functions; batch callers, the
 registry oracles and every request the driver path declines):
@@ -79,6 +80,12 @@ from .rasterize import Geometry, geometry_bbox, rasterize_mask
 # value columns in the driver), is the largest request the driver answers;
 # a larger one takes the Spark plan, which scales to the 100 TB cube.
 DRIVER_MAX_ROWS = 2000 * 1000 * 5
+# Geometries a driver-side fan-out may hold. Each adds one bbox term to the
+# read's filter, which pyarrow evaluates over every decoded row: ~10 ms a
+# term on the demo level 0, so 32 terms stay well below the ~1-2 s of the
+# Spark fan-out, while 100 terms took 1.1 s there and the cost grows faster
+# than linearly beyond (1000 terms: 3.4 s on a 100k-row cube).
+DRIVER_MAX_GEOMETRIES = 32
 
 _NS = 1_000_000_000
 _UTC_ZONES = ("UTC", "Etc/UTC", "GMT", "Etc/GMT", "Z")
@@ -376,6 +383,8 @@ def local_time_series(
             probes.append((gi, cells, None if counted else len(cells)))
     if not probes or not files:
         return []
+    if len(probes) > DRIVER_MAX_GEOMETRIES:
+        return None
     boxes = [
         (*cells.min(axis=0).tolist(), *cells.max(axis=0).tolist())
         for _, cells, _ in probes
