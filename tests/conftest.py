@@ -22,3 +22,22 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return SF_DIR
+
+
+@pytest.fixture(scope="session")
+def register_weekly():
+    """A function that registers the reference demo's computed weekly-mean
+    cube of a catalog's 'demo' (no level table) under an identifier."""
+    from xcube_server_spark.cube.catalog import DatasetMeta
+
+    def register(cat, ident: str) -> None:
+        if ident not in cat.datasets:
+            base = cat.datasets["demo"]
+            cat.register(DatasetMeta(
+                identifier=ident, title="weekly", base_path="",
+                grid=base.grid, tile_grid=base.tile_grid, variables=base.variables,
+                computed=True, function="resample_in_time",
+                input_datasets=["demo"], input_params={"period": "1W"},
+            ))
+
+    return register

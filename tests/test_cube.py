@@ -295,21 +295,6 @@ def test_time_range_filter(demo_catalog):
     assert df.count() == 4
 
 
-def _register_weekly(cat, ident: str) -> None:
-    """Register the reference demo's computed weekly-mean cube of 'demo'
-    (no level table) under ``ident``."""
-    from xcube_server_spark.cube.catalog import DatasetMeta
-
-    if ident not in cat.datasets:
-        base = cat.datasets["demo"]
-        cat.register(DatasetMeta(
-            identifier=ident, title="weekly", base_path="",
-            grid=base.grid, tile_grid=base.tile_grid, variables=base.variables,
-            computed=True, function="resample_in_time",
-            input_datasets=["demo"], input_params={"period": "1W"},
-        ))
-
-
 def _spark_rows(df) -> list[dict]:
     return [] if df is None else [r.asDict() for r in df.collect()]
 
@@ -338,7 +323,8 @@ HOLED = {
 # startDate/endDate pairs: open, the date form, exact step times in both
 # forms (t1 = 2017-01-25 09:35:51, t3 = 2017-01-28 09:58:11), a bound a
 # second before a step (inside the label slack, dropped by the exact
-# filter), a fraction, and a window with no step
+# filter), a fraction, bounds outside the int64-nanosecond range of the
+# stored times (all steps; no step), and a window with no step
 WINDOWS = [
     (None, None),
     ("2017-01-15", "2017-01-29"),
@@ -346,6 +332,8 @@ WINDOWS = [
     ("2017-01-25T09:35:51Z", "2017-01-28T09:58:10Z"),
     ("2017-01-25 09:35:51.5", None),
     (None, "2017-01-26"),
+    ("1000-01-01", "9999-12-31"),
+    ("9999-12-31", None),
     ("2018-01-01", "2018-02-01"),
 ]
 
@@ -417,6 +405,20 @@ def test_local_fanout_timeseries_matches_spark(demo_catalog, start, end):
         ))
         _assert_same_rows(local, spark)
         assert {r["geometry_id"] for r in local} == {0, 1, 2, 4}
+    # many scattered points, two of them on one cell: one read of their
+    # joint bbox, each point's rows picked by the join
+    g = demo_catalog.datasets["demo"].grid
+    points = [
+        {"type": "Point", "coordinates": [g.lon_of(j * 37 % W), g.lat_of(j * 11 % H)]}
+        for j in range(60)
+    ] + [{"type": "Point", "coordinates": [g.lon_of(0), g.lat_of(0)]}]
+    local = local_time_series(
+        demo_catalog, "demo", "conc_tsm", points, start, end, collection=True
+    )
+    _assert_same_rows(local, _spark_rows(time_series_for_geometry_collection(
+        demo_catalog, "demo", "conc_tsm", points, start, end,
+    )))
+    assert {r["geometry_id"] for r in local} == set(range(61))
     far = [{"type": "Polygon", "coordinates": [_box(-150.0, -30.0, -149.0, -29.0)]}]
     for empty in ([], far):
         assert local_time_series(
@@ -424,12 +426,12 @@ def test_local_fanout_timeseries_matches_spark(demo_catalog, start, end):
         ) == []
 
 
-def test_local_timeseries_declines_to_spark(demo_catalog, monkeypatch):
+def test_local_timeseries_declines_to_spark(demo_catalog, monkeypatch, register_weekly):
     """The driver path returns None, and the routes take the Spark plan,
-    for a computed dataset, a request over DRIVER_MAX_ROWS, a date bound it
-    does not parse, a column that is not a variable and a fan-out over
-    DRIVER_MAX_GEOMETRIES; at either constant itself it still answers."""
-    _register_weekly(demo_catalog, "demo-1w-ts")
+    for a computed dataset, a request over DRIVER_MAX_ROWS (at the constant
+    itself it still answers), a date bound it does not parse and a column
+    that is not a variable."""
+    register_weekly(demo_catalog, "demo-1w-ts")
     point = {"type": "Point", "coordinates": [2.1, 51.4]}
     assert local_time_series(demo_catalog, "demo-1w-ts", "kd489", [point]) is None
     assert demo_catalog.local_parts("demo-1w-ts", 0, [0]) is None
@@ -450,19 +452,6 @@ def test_local_timeseries_declines_to_spark(demo_catalog, monkeypatch):
         assert local_time_series(demo_catalog, "demo", "kd489", [point], start) is None
     # a column that is not one of the dataset's variables
     assert local_time_series(demo_catalog, "demo", "lat_idx", [point]) is None
-    # a fan-out over DRIVER_MAX_GEOMETRIES geometries with cells
-    g = demo_catalog.datasets["demo"].grid
-    points = [
-        {"type": "Point", "coordinates": [g.lon_of(j), g.lat_of(j % H)]}
-        for j in range(timeseries.DRIVER_MAX_GEOMETRIES + 1)
-    ]
-    far = {"type": "Point", "coordinates": [-150.0, -30.0]}
-    assert local_time_series(
-        demo_catalog, "demo", "kd489", points, collection=True
-    ) is None
-    assert len(local_time_series(
-        demo_catalog, "demo", "kd489", points[1:] + [far], collection=True
-    )) == timeseries.DRIVER_MAX_GEOMETRIES * len(DEMO_TIMES)
 
 
 def test_local_parts_lists_time_partitions(demo_catalog):
@@ -711,12 +700,12 @@ def test_tile_fast_path_matches_spark_path(demo_catalog):
     assert dt < 1.0, f"fast path took {dt:.3f}s"
 
 
-def test_render_tiles_prunes_scan_by_tile_window(demo_catalog):
+def test_render_tiles_prunes_scan_by_tile_window(demo_catalog, register_weekly):
     """render_tiles(tiles=[...]) filters on each tile's lat_idx/lon_idx
     window, so the bounds are parquet PushedFilters for a native dataset
     and, through its grouping keys, for a computed one; the PNGs are the
     fast path's and the full-level render's."""
-    _register_weekly(demo_catalog, "demo-1w-tiles")
+    register_weekly(demo_catalog, "demo-1w-tiles")
     z = demo_catalog.datasets["demo"].tile_grid.num_levels - 1  # level 0, 64-px tiles
     fast = TileService(demo_catalog, fast_path=True)
     for ds in ("demo", "demo-1w-tiles"):

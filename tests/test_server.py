@@ -530,25 +530,11 @@ def test_places_query_modes_parity(server):
         assert e.code == 400
 
 
-def _weekly(cat, ident: str = "demo-1w") -> None:
-    """Register the reference demo's computed weekly-mean cube of 'demo'."""
-    from xcube_server_spark.cube.catalog import DatasetMeta
-
-    if ident not in cat.datasets:
-        base = cat.datasets["demo"]
-        cat.register(DatasetMeta(
-            identifier=ident, title="weekly", base_path="",
-            grid=base.grid, tile_grid=base.tile_grid, variables=base.variables,
-            computed=True, function="resample_in_time",
-            input_datasets=["demo"], input_params={"period": "1W"},
-        ))
-
-
-def test_wmts_get_feature_info_computed_dataset(live, server):
+def test_wmts_get_feature_info_computed_dataset(live, server, register_weekly):
     """GetFeatureInfo on a computed dataset reads the cell through the
     catalog's computed frame (it has no level table): the week ending
     2017-01-29 is the mean of the three input steps inside it."""
-    _weekly(live.catalog)
+    register_weekly(live.catalog, "demo-1w")
     kvp = ("/wmts/kvp?Service=WMTS&Request=GetFeatureInfo&Layer={layer}"
            "&TileMatrix=1&TileCol=0&TileRow=0&I=5&J=7&Time={time}")
     status, info = _get_json(server + kvp.format(
@@ -566,6 +552,8 @@ def test_wmts_get_feature_info_computed_dataset(live, server):
 TS_REQUESTS = [
     ("GET", "/ts/{ds}/conc_tsm/point?lon=2.1&lat=51.4", None),
     ("GET", "/ts/{ds}/conc_tsm/point?lon=2.1&lat=51.4&startDate=2017-01-20", None),
+    ("GET", "/ts/{ds}/kd489/point?lon=2.1&lat=51.4&startDate=1000-01-01"
+     "&endDate=9999-12-31", None),
     ("POST", "/ts/{ds}/kd489/geometry", {
         "type": "Polygon",
         "coordinates": [[[1.0, 51.0], [2.0, 51.0], [2.0, 52.0], [1.0, 52.0], [1.0, 51.0]]],
@@ -593,7 +581,9 @@ def _ts_request(server, method, path, body):
     return _post_json(server + path, body)
 
 
-def test_ts_routes_answer_local_cube_without_spark(live, server, monkeypatch):
+def test_ts_routes_answer_local_cube_without_spark(
+    live, server, monkeypatch, register_weekly
+):
     """The point, geometry and fan-out routes answer a local cube on the
     driver: no Spark job runs, and the answers equal the Spark plans'. A
     computed dataset still takes the Spark plans."""
@@ -640,7 +630,7 @@ def test_ts_routes_answer_local_cube_without_spark(live, server, monkeypatch):
             assert [len(p["results"]) for p in d_doc["results"]] == [
                 len(p["results"]) for p in s_doc["results"]]
 
-    _weekly(live.catalog)
+    register_weekly(live.catalog, "demo-1w")
     status, doc = _get_json(f"{server}/ts/demo-1w/kd489/point?lon=2.1&lat=51.4")
     assert status == 200
     assert [r["date"] for r in doc["results"]] == [

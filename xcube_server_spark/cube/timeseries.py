@@ -13,16 +13,17 @@ is a local parquet table: the reference answers time series in-process
 from xarray/dask, in the latency class of its tile reads (SURVEY.md §7.3-7),
 and so does this path, like the tile fast path. One pyarrow read takes the
 ``time_idx`` partitions whose step falls in the window and, within them,
-the rows inside any geometry's index bbox (one bbox term per geometry, so
-scattered fan-out rectangles do not read the grid between them). Each
-geometry's cells then select their rows through a boolean grid over its
-bbox, and the kept rows are counted and summed per ``time`` step. A
-request takes the Spark plan instead when the dataset is computed or on an
-object store, when a date bound is not one of the forms parsed here, when
-the session time zone is not UTC, when ``var`` is not one of the dataset's
-variables, when it would touch more than ``DRIVER_MAX_ROWS`` rows (bbox
-cells × steps in the window), or when a fan-out holds more than
-``DRIVER_MAX_GEOMETRIES`` geometries with cells in the grid.
+the rows inside the index bbox of all the geometries' cells (a range
+filter, whose cost does not grow with the number of geometries). A hash
+join with every geometry's (geometry_id, lat_idx, lon_idx) cells keeps
+each geometry's rows, a cell shared by two geometries once for each, and
+one ``group_by`` on (geometry_id, time) counts and sums them. The
+session time zone is UTC (``session.py``), so the ``startDate``/``endDate``
+instants are read as UTC, as ``to_timestamp`` does there. A request takes
+the Spark plan instead when the dataset is computed or on an object store,
+when a date bound is not one of the forms parsed here, when ``var`` is not
+one of the dataset's variables, or when it would touch more than
+``DRIVER_MAX_ROWS`` rows (bbox cells × steps in the window).
 
 Spark plans (the ``time_series_for_*`` functions; batch callers, the
 registry oracles and every request the driver path declines):
@@ -57,8 +58,6 @@ consistent masked semantics for both and document the divergence here.
 from __future__ import annotations
 
 import datetime as _dt
-import functools
-import operator
 import re
 
 import numpy as np
@@ -74,21 +73,15 @@ from .catalog import CubeCatalog
 from .grid import GridMeta
 from .rasterize import Geometry, geometry_bbox, rasterize_mask
 
-# Rows a driver-side read may touch: the cells of the geometries' index
-# bboxes times the steps in the window. The demo cube's whole level 0,
-# 2000 × 1000 cells × 5 steps = 10M rows (about 200 MB of time, index and
-# value columns in the driver), is the largest request the driver answers;
-# a larger one takes the Spark plan, which scales to the 100 TB cube.
+# Rows a driver-side read may touch: the cells of the index bbox of all the
+# geometries' cells times the steps in the window. The demo cube's whole
+# level 0, 2000 × 1000 cells × 5 steps = 10M rows (about 200 MB of time,
+# index and value columns in the driver), is the largest request the driver
+# answers; a larger one takes the Spark plan, which scales to the 100 TB
+# cube.
 DRIVER_MAX_ROWS = 2000 * 1000 * 5
-# Geometries a driver-side fan-out may hold. Each adds one bbox term to the
-# read's filter, which pyarrow evaluates over every decoded row: ~10 ms a
-# term on the demo level 0, so 32 terms stay well below the ~1-2 s of the
-# Spark fan-out, while 100 terms took 1.1 s there and the cost grows faster
-# than linearly beyond (1000 terms: 3.4 s on a 100k-row cube).
-DRIVER_MAX_GEOMETRIES = 32
 
 _NS = 1_000_000_000
-_UTC_ZONES = ("UTC", "Etc/UTC", "GMT", "Etc/GMT", "Z")
 # the startDate/endDate forms the driver parses the way Spark's
 # to_timestamp does: a date, or a date and time with up to six fraction
 # digits and an optional Z; any other string takes the Spark plan
@@ -282,7 +275,9 @@ def time_series_for_geometry_collection(
 
 def _bound_ns(text: str) -> int:
     """Nanoseconds since the epoch (UTC) of a ``startDate``/``endDate``
-    value; ValueError for a form the driver does not parse."""
+    value, clamped to the int64 range of the stored ``time`` values (a
+    bound beyond it keeps or drops every step, as in the Spark plan);
+    ValueError for a form the driver does not parse."""
     m = _BOUND.fullmatch(text)
     if m is None:
         raise ValueError(text)
@@ -292,7 +287,8 @@ def _bound_ns(text: str) -> int:
         tzinfo=_dt.timezone.utc,
     )
     us = int((frac or "0").ljust(6, "0"))
-    return int(t.timestamp()) * _NS + us * 1000
+    ns = int(t.timestamp()) * _NS + us * 1000
+    return min(max(ns, -(2**63)), 2**63 - 1)
 
 
 def _steps_in(times: tuple[str, ...], lo: int | None, hi: int | None) -> list[int]:
@@ -300,46 +296,12 @@ def _steps_in(times: tuple[str, ...], lo: int | None, hi: int | None) -> list[in
     whole seconds, so each bound gets a second of slack; the read applies
     the exact bounds to the stored ``time`` values. ValueError for a label
     numpy cannot parse."""
-    ns = np.array(times, dtype="datetime64[ns]").astype(np.int64)
-    keep = np.ones(len(ns), dtype=bool)
-    if lo is not None:
-        keep &= ns >= lo - _NS
-    if hi is not None:
-        keep &= ns <= hi + _NS
-    return np.flatnonzero(keep).tolist()
-
-
-def _area(box: tuple[int, int, int, int]) -> int:
-    """Cells of an inclusive (lat_lo, lon_lo, lat_hi, lon_hi) index box."""
-    i0, j0, i1, j1 = box
-    return (i1 - i0 + 1) * (j1 - j0 + 1)
-
-
-def _rows_in(
-    table: pa.Table, cells: np.ndarray, box: tuple[int, int, int, int], alone: bool
-) -> np.ndarray | None:
-    """Which rows of a read lie in one geometry's ``cells`` (bbox ``box``):
-    a boolean grid of the cells over the bbox, looked up at each row's
-    index. None when every row does: the read's only bbox, which the cells
-    fill. ``alone=False`` means the read also holds other bboxes' rows."""
-    i0, j0, i1, j1 = box
-    full = len(cells) == _area(box)
-    if alone and full:
-        return None
-    lat = table.column("lat_idx").to_numpy()
-    lon = table.column("lon_idx").to_numpy()
-    if alone:
-        rows = np.arange(len(lat))
-    else:
-        rows = np.flatnonzero((lat >= i0) & (lat <= i1) & (lon >= j0) & (lon <= j1))
-    keep = np.zeros(len(lat), dtype=bool)
-    if full:
-        keep[rows] = True
-    else:
-        grid = np.zeros((i1 - i0 + 1, j1 - j0 + 1), dtype=bool)
-        grid[cells[:, 0] - i0, cells[:, 1] - j0] = True
-        keep[rows] = grid[lat[rows] - i0, lon[rows] - j0]
-    return keep
+    # Python ints: a clamped bound with its slack is beyond int64
+    ns = np.array(times, dtype="datetime64[ns]").astype(np.int64).tolist()
+    return [
+        i for i, t in enumerate(ns)
+        if (lo is None or t >= lo - _NS) and (hi is None or t <= hi + _NS)
+    ]
 
 
 def local_time_series(
@@ -364,8 +326,6 @@ def local_time_series(
     meta = catalog.datasets[ds_id]
     if var not in meta.variables:
         return None  # the Spark plan reads or rejects any other column
-    if catalog.spark.conf.get("spark.sql.session.timeZone") not in _UTC_ZONES:
-        return None
     try:
         lo = None if start is None else _bound_ns(start)
         hi = None if end is None else _bound_ns(end)
@@ -375,60 +335,63 @@ def local_time_series(
     files = catalog.local_parts(ds_id, 0, steps)
     if files is None:
         return None
-    probes = []
-    for gi, geom in enumerate(geometries):
-        cells = _cells(geom, meta.grid)
-        if len(cells):
-            counted = collection or geom["type"] == "Point"
-            probes.append((gi, cells, None if counted else len(cells)))
+    probes = [(gi, _cells(geom, meta.grid)) for gi, geom in enumerate(geometries)]
+    probes = [(gi, cells) for gi, cells in probes if len(cells)]
     if not probes or not files:
         return []
-    if len(probes) > DRIVER_MAX_GEOMETRIES:
-        return None
-    boxes = [
-        (*cells.min(axis=0).tolist(), *cells.max(axis=0).tolist())
-        for _, cells, _ in probes
-    ]
-    distinct = set(boxes)
-    if sum(map(_area, distinct)) * len(steps) > DRIVER_MAX_ROWS:
+    cells = np.concatenate([c for _, c in probes])
+    (i0, j0), (i1, j1) = cells.min(axis=0).tolist(), cells.max(axis=0).tolist()
+    area = (i1 - i0 + 1) * (j1 - j0 + 1)
+    if area * len(steps) > DRIVER_MAX_ROWS:
         return None
 
     dataset = pads.dataset(files, format="parquet")
-    f = pads.field
-    filt = functools.reduce(operator.or_, [
-        (f("lat_idx") >= i0) & (f("lat_idx") <= i1)
-        & (f("lon_idx") >= j0) & (f("lon_idx") <= j1)
-        for i0, j0, i1, j1 in sorted(distinct)
-    ])
+    lat, lon, time = pads.field("lat_idx"), pads.field("lon_idx"), pads.field("time")
+    filt = (lat >= i0) & (lat <= i1) & (lon >= j0) & (lon <= j1)
     ns_type = pa.timestamp("ns", dataset.schema.field("time").type.tz)
     if lo is not None:
-        filt &= f("time") >= pa.scalar(lo, ns_type)
+        filt &= time >= pa.scalar(lo, ns_type)
     if hi is not None:
-        filt &= f("time") <= pa.scalar(hi, ns_type)
+        filt &= time <= pa.scalar(hi, ns_type)
     table = dataset.to_table(columns=["time", "lat_idx", "lon_idx", var], filter=filt)
-    values = table.select(["time", var])
+    if len(probes) == 1 and len(cells) == area:
+        # one geometry whose cells fill the bbox (a point, a rectangle) owns
+        # every row read: no join (on the demo level 0 the join is ~100 ms
+        # of a 30%-of-extent rectangle's ~300 ms)
+        gid = np.full(table.num_rows, probes[0][0])
+        kept = table.append_column("geometry_id", pa.array(gid))
+    else:
+        gids = np.repeat([gi for gi, _ in probes], [len(c) for _, c in probes])
+        mask = pa.table({
+            "geometry_id": gids,
+            "lat_idx": pa.array(cells[:, 0], table.schema.field("lat_idx").type),
+            "lon_idx": pa.array(cells[:, 1], table.schema.field("lon_idx").type),
+        })
+        kept = table.join(mask, ["lat_idx", "lon_idx"], join_type="inner")
+    per_step = (
+        kept.group_by(["geometry_id", "time"])
+        .aggregate([([], "count_all"), (var, "count"), (var, "sum")])
+        .sort_by([("geometry_id", "ascending"), ("time", "ascending")])
+    )
+    # A6: a single polygon's totalCount is its mask's cell count
+    polygon = not collection and geometries[0]["type"] != "Point"
+    # iso_ts: round to the second, half up
+    ns = per_step.column("time").cast(ns_type).cast(pa.int64()).to_numpy()
+    dates = np.datetime_as_string(((ns + _NS // 2) // _NS).astype("datetime64[s]"))
     out = []
-    for (gi, cells, total), box in zip(probes, boxes):
-        keep = _rows_in(table, cells, box, alone=len(distinct) == 1)
-        kept = values if keep is None else values.filter(pa.array(keep))
-        per_step = kept.group_by("time").aggregate(
-            [([], "count_all"), (var, "count"), (var, "sum")]
-        ).sort_by("time")
-        # iso_ts: round to the second, half up
-        ns = per_step.column("time").cast(ns_type).cast(pa.int64()).to_numpy()
-        dates = np.datetime_as_string(((ns + _NS // 2) // _NS).astype("datetime64[s]"))
-        for date, n_all, n_valid, var_sum in zip(
-            dates.tolist(),
-            per_step.column("count_all").to_pylist(),
-            per_step.column(f"{var}_count").to_pylist(),
-            per_step.column(f"{var}_sum").to_pylist(),
-        ):
-            row = {"geometry_id": gi} if collection else {}
-            row.update(
-                date=f"{date}Z",
-                total_count=n_all if total is None else total,
-                valid_count=n_valid,
-                average=var_sum / n_valid if n_valid else None,
-            )
-            out.append(row)
+    for gi, date, n_all, n_valid, var_sum in zip(
+        per_step.column("geometry_id").to_pylist(),
+        dates.tolist(),
+        per_step.column("count_all").to_pylist(),
+        per_step.column(f"{var}_count").to_pylist(),
+        per_step.column(f"{var}_sum").to_pylist(),
+    ):
+        row = {"geometry_id": gi} if collection else {}
+        row.update(
+            date=f"{date}Z",
+            total_count=len(cells) if polygon else n_all,
+            valid_count=n_valid,
+            average=var_sum / n_valid if n_valid else None,
+        )
+        out.append(row)
     return out
